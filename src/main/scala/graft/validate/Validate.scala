@@ -1,8 +1,9 @@
 package graft.validate
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructField}
 
 import graft.policy.PolicyCatalog
 
@@ -26,40 +27,46 @@ object Validate {
 
   /** PII scan over one table (validate_anonymization.py:60-139): for each
     * string column, sample distinct non-null values and regex-test them.
-    * Returns rows (column_name, value, pattern) for each hit. Runs as one
-    * Spark job per column over a sampled distinct set — at scale the
-    * `distinct().limit(n)` keeps the regex work bounded regardless of table
-    * size.
+    * Returns rows (column_name, value, pattern) for each hit.
+    *
+    * One pass over the table, whatever its width: every string column is
+    * stacked into `(column_name, value)` — cast to the default
+    * `StringType`, so columns of different collations share one array —
+    * and one `distinct` runs over the stack. Each column then keeps at
+    * most `sampleSize` of its distinct values, chosen by a hash of the
+    * value (a deterministic sample, ties broken by the value itself), so
+    * the regex work stays bounded regardless of table size. A column with
+    * at most `sampleSize` distinct values is scanned exhaustively.
     */
   def piiScan(df: DataFrame, sampleSize: Int = 100): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val stringCols =
-      df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
+    // `case _: StringType`, not `== StringType`: a collated string type
+    // (e.g. UTF8_LCASE) is a StringType but not equal to the default one
+    val stringCols = df.schema.fields.collect { case StructField(n, _: StringType, _, _) => n }.toSeq
+    if (stringCols.isEmpty)
+      return Seq.empty[(String, String, String)].toDF("column_name", "value", "pattern")
     val patterns = Seq(
       "email"   -> EmailPattern,
       "phone"   -> PhonePattern,
       "address" -> AddressPattern
     )
-    val perColumn = stringCols.map { c =>
-      val sampled = df
-        .select(col(c).as("value"))
-        .filter(col("value").isNotNull)
-        .distinct()
-        .limit(sampleSize)
-      val hits = patterns
-        .map { case (name, p) =>
-          when(col("value").rlike(p), name)
-        }
-      sampled
-        .withColumn("pattern", coalesce(hits: _*))
-        .filter(col("pattern").isNotNull)
-        .select(lit(c).as("column_name"), col("value"), col("pattern"))
-    }
-    perColumn.reduceOption(_.unionAll(_)).getOrElse {
-      Seq.empty[(String, String, String)]
-        .toDF("column_name", "value", "pattern")
-    }
+    val stacked = df
+      .select(explode(array(stringCols.map { c =>
+        struct(lit(c).as("column_name"), col(c).cast(StringType).as("value"))
+      }: _*)).as("_kv"))
+      .select(col("_kv.column_name"), col("_kv.value"))
+      .filter(col("value").isNotNull)
+      .distinct()
+    val sample = Window.partitionBy(col("column_name"))
+      .orderBy(xxhash64(col("value")), col("value"))
+    val hits = patterns.map { case (name, p) => when(col("value").rlike(p), name) }
+    stacked
+      .withColumn("_r", row_number().over(sample))
+      .filter(col("_r") <= sampleSize)
+      .withColumn("pattern", coalesce(hits: _*))
+      .filter(col("pattern").isNotNull)
+      .select(col("column_name"), col("value"), col("pattern"))
   }
 
   /** Catalog-wide PII scan — the Spark analogue of the reference's

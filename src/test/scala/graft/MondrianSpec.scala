@@ -199,6 +199,137 @@ class MondrianSpec extends SparkSpec {
     }
   }
 
+  /** Each row's `_gid` by id, with the in-task switch at `finishRows`
+    * (0 never switches: the round loop all the way down).
+    */
+  private def labels(df: org.apache.spark.sql.DataFrame, qis: Seq[String], k: Int,
+      finishRows: Long, maxRounds: Int = 39, sv: Option[String] = None, l: Int = 1,
+      t: Option[Double] = None): Map[String, Long] =
+    Mondrian.label(df, "id", qis, k, maxRounds, sv, l, t, finishRows)
+      .select(col("id").cast("string"), col("_gid")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("in-task finish: every row's _gid equals the distributed round loop's") {
+    // finishRows = 0 never switches (the round loop all the way down);
+    // the default switches at round 0 at this size; n/3 switches at
+    // round 2. All three must agree on (id, _gid) exactly, not just on
+    // the partition.
+    def agree(what: String, df: org.apache.spark.sql.DataFrame,
+        qis: Seq[String], k: Int, maxRounds: Int = 39,
+        sv: Option[String] = None, l: Int = 1, t: Option[Double] = None): Unit = {
+      val n = df.count()
+      val loop = labels(df, qis, k, 0L, maxRounds, sv, l, t)
+      assert(loop.size == n, s"$what: ids must be unique")
+      assert(loop.values.toSet.size > 1, s"$what: the case must split")
+      for (rows <- Seq(Mondrian.FinishMaxRows, n / 3)) {
+        assert(labels(df, qis, k, rows, maxRounds, sv, l, t) == loop,
+          s"$what: in-task finish (switch bound $rows) relabels rows")
+      }
+    }
+
+    // the property test's data and guard settings
+    for {
+      seed <- Seq(1, 7, 42)
+      (lOpt, tOpt) <- Seq(
+        (None, None), (Some(3), None), (None, Some(0.22)), (Some(2), Some(0.3)))
+    } {
+      val rnd = new scala.util.Random(seed)
+      val n = 150 + rnd.nextInt(150)
+      val df = (0 until n).map { i =>
+        (i.toLong, rnd.nextInt(40).toDouble, (rnd.nextInt(4000) / 7).toDouble,
+          s"s${rnd.nextInt(6)}")
+      }.toDF("id", "qa", "qb", "sv")
+      agree(s"seed=$seed l=$lOpt t=$tOpt", df, Seq("qa", "qb"), k = 12,
+        sv = if (lOpt.isDefined || tOpt.isDefined) Some("sv") else None,
+        l = lOpt.getOrElse(1), t = tOpt)
+    }
+
+    // a zero-range group of 100 rows (> 2k) goes final mid-recursion
+    agree("zero-range group", (0 until 160).map { i =>
+      (i.toLong, 3.0, if (i < 60) i.toDouble else 1000.0)
+    }.toDF("id", "qa", "qb"), Seq("qa", "qb"), k = 10)
+
+    // five split values, each shared by 40 rows: the id breaks the ties,
+    // and ids are not in value order
+    agree("ties on the split value", (0 until 200).map { i =>
+      ((i * 37 % 200).toLong, (i % 5).toDouble, (i % 3).toDouble)
+    }.toDF("id", "qa", "qb"), Seq("qa", "qb"), k = 7)
+
+    // non-ASCII string ids on tied values: Spark orders strings by UTF-8
+    // bytes, which puts U+FF5E below U+1F600 (UTF-16 order says the
+    // opposite), so the tie-break must use Spark's comparator
+    val names = Seq("\uFF5E", "\uD83D\uDE00", "é", "z", "日本", "Ω", "a", "\u00A0")
+    agree("non-ASCII string ids", (0 until 160).map { i =>
+      (s"${names(i % names.size)}${i / names.size}", (i % 4).toDouble, (i % 7).toDouble)
+    }.toDF("id", "qa", "qb"), Seq("qa", "qb"), k = 5)
+
+    // maxRounds stops the recursion at depth 2, well before minimality
+    agree("maxRounds reached", (0 until 300).map(i => (i.toLong, i.toDouble))
+      .toDF("id", "qa"), Seq("qa"), k = 5, maxRounds = 2)
+
+    // null and signed-zero QI values take Spark's semantics: nulls rank
+    // first, -0.0 ties 0.0 and min/max skip nulls; a NaN makes its QI's
+    // global range NaN, which scores 0 like a zero range
+    agree("nulls, signed zeros and NaN", (0 until 240).map { i =>
+      val qa: java.lang.Double = i % 11 match {
+        case 0 => null
+        case 1 => -0.0
+        case 2 => 0.0
+        case r => r.toDouble
+      }
+      (i.toLong, qa, (i * 7 % 240).toDouble, if (i % 13 == 0) Double.NaN else i.toDouble)
+    }.toDF("id", "qa", "qb", "qc"), Seq("qa", "qb", "qc"), k = 6)
+  }
+
+  test("in-task finish: a guard-demoted group over the switch bound stays out of the tasks") {
+    // 400 rows on one QI: round 0 splits ids 0-199 from 200-399; round 1
+    // would split 0-199 into an all-"a" and an all-"b" half, which both
+    // guards refuse, while 200-399 (alternating "c"/"d") keeps splitting.
+    // With a 100-row bound the switch comes at round 2, where the
+    // demoted 200-row group is splittable by range and count alone. It
+    // must bypass the exchange: the finish refuses any group above the
+    // bound, so agreeing with the round loop also proves no task took it.
+    val df = (0 until 400).map { i =>
+      (i.toLong, i.toDouble,
+        if (i < 100) "a" else if (i < 200) "b" else if (i % 2 == 0) "c" else "d")
+    }.toDF("id", "qa", "sv")
+    for ((l, t) <- Seq((2, None), (1, Some(0.6)))) {
+      val loop = labels(df, Seq("qa"), k = 2, finishRows = 0L, sv = Some("sv"), l = l, t = t)
+      assert(loop.values.groupBy(identity).values.map(_.size).max == 200,
+        s"l=$l t=$t: the 200-row group must be guard-demoted")
+      assert(labels(df, Seq("qa"), k = 2, finishRows = 100L, sv = Some("sv"), l = l, t = t) == loop,
+        s"l=$l t=$t: in-task finish at round 2 relabels rows")
+    }
+  }
+
+  test("in-task finish: wide rows wait in Spark's spillable buffer") {
+    // the recursion holds only the QIs (and sensitive values) in task
+    // memory; the full rows go to the window operator's row buffer,
+    // which spills past its threshold instead of holding ~4 KB rows
+    val df = (0 until 2000).map { i =>
+      (i.toLong, (i % 37).toDouble, (i * 13 % 2000).toDouble, "x" * 4000 + i)
+    }.toDF("id", "qa", "qb", "pad")
+    val loop = labels(df, Seq("qa", "qb"), k = 5, finishRows = 0L)
+    val spilled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => spilled.addAndGet(m.memoryBytesSpilled))
+    }
+    val sc = spark.sparkContext
+    spark.conf.set("spark.sql.windowExec.buffer.in.memory.threshold", "16")
+    spark.conf.set("spark.sql.windowExec.buffer.spill.threshold", "64")
+    sc.addSparkListener(listener)
+    val finished = try labels(df, Seq("qa", "qb"), k = 5, finishRows = Mondrian.FinishMaxRows)
+    finally {
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+      sc.removeSparkListener(listener)
+      spark.conf.unset("spark.sql.windowExec.buffer.in.memory.threshold")
+      spark.conf.unset("spark.sql.windowExec.buffer.spill.threshold")
+    }
+    assert(finished == loop, "wide rows: in-task finish relabels rows")
+    assert(spilled.get > 0L, "the finish's row buffer never spilled")
+  }
+
   test("early-round rank: range-partitioned plan, bit-identical to the keyed window") {
     // round 0's _gid-keyed window is a SINGLE task sorting the whole
     // table (every row carries gid 0) — the scale-killer the r8 verdict
@@ -247,6 +378,22 @@ class MondrianSpec extends SparkSpec {
     // cannot overflow (the keyed path would; it is never used there)
     assert(early.schema("_rnk").dataType ==
       org.apache.spark.sql.types.LongType)
+
+    // one 20k-row group read from a checkpoint, as the round loop feeds
+    // it: the range exchange samples its bounds, so an offsets pass that
+    // re-planned the exchange would see another layout (ranks with gaps
+    // and duplicates). The ranks must be exactly 1..n, as keyed.
+    val one = spark.range(0, 20000, 1, 4)
+      .select(col("id"), ((col("id") * 7919) % 10007).cast("double").as("_q0"),
+        lit(0L).as("_gid"), lit(0).as("_dim"), lit(20000L).as("_cnt"))
+      .localCheckpoint()
+    val oneSv = when(col("_dim") === 0, col("_q0")).otherwise(lit(null).cast("double"))
+    val oneEarly = Mondrian.withRank(one, oneSv, "id", round = 0, nRows = big)
+    assert(oneEarly.queryExecution.executedPlan.toString.contains("_rpid"))
+    val oneKeyed = ranks(Mondrian.withRank(one, oneSv, "id", round = 30, nRows = big))
+    val differ = ranks(oneEarly).zip(oneKeyed).count { case (a, b) => a != b }
+    assert(differ == 0, s"range-partitioned ranks over a checkpointed group: " +
+      s"$differ of ${oneKeyed.size} rows differ from the keyed window's")
   }
 
   test("all-constant QIs and empty input both return the root labeling") {

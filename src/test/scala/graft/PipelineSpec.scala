@@ -136,6 +136,55 @@ class PipelineSpec extends SparkSpec {
     assert(martHits.count() == 0)
   }
 
+  test("pii scan: at most sampleSize distinct values per column is an exhaustive scan") {
+    // three string columns of <= 60 distinct values each, repeated over
+    // 3,000 rows with nulls: the one-pass sample must keep every value,
+    // so the hits equal the three regexes run over all distinct values
+    // (first matching pattern wins, as in the scan)
+    val rnd = new scala.util.Random(5)
+    def pick(i: Int): String = i % 6 match {
+      case 0 => s"agent$i@mairie-$i.fr"
+      case 1 => s"+33 ${1 + i % 9} 23 45 67 ${10 + i % 90}"
+      case 2 => s"${i + 1} rue des Lilas $i"
+      case 3 => s"user_$i@anonymized.gouv.fr"
+      case 4 => s"+33 ${1 + i % 9} XX XX XX XX"
+      case _ => s"plain value $i"
+    }
+    val rows = (0 until 3000).map { _ =>
+      def v(n: Int) = if (rnd.nextInt(10) == 0) null else pick(rnd.nextInt(n))
+      (v(60), v(40), v(25), rnd.nextInt(100))
+    }
+    val df = rows.toDF("a", "b", "c", "n")
+    val patterns = Seq("email" -> Validate.EmailPattern,
+      "phone" -> Validate.PhonePattern, "address" -> Validate.AddressPattern)
+      .map { case (name, p) => name -> java.util.regex.Pattern.compile(p) }
+    val expected = Seq("a" -> rows.map(_._1), "b" -> rows.map(_._2), "c" -> rows.map(_._3))
+      .flatMap { case (c, vs) =>
+        vs.filter(_ != null).distinct.flatMap { v =>
+          patterns.collectFirst { case (name, p) if p.matcher(v).find() => (c, v, name) }
+        }
+      }.toSet
+    val got = Validate.piiScan(df).as[(String, String, String)].collect().toSet
+    assert(expected.map(_._3) == Set("email", "phone", "address"))
+    assert(got == expected)
+    // a smaller sample is deterministic and bounded per column
+    val small = Validate.piiScan(df, sampleSize = 7).as[(String, String, String)].collect()
+    assert(small.toSet == Validate.piiScan(df, sampleSize = 7)
+      .as[(String, String, String)].collect().toSet)
+    assert(small.groupBy(_._1).values.forall(_.length <= 7))
+    assert(small.toSet.subsetOf(expected))
+  }
+
+  test("pii scan reads collated string columns") {
+    // a UTF8_LCASE column is a StringType but not `== StringType`
+    val df = Seq(("raw@real-domain.fr", "x"), ("user_1@anonymized.gouv.fr", "y"))
+      .toDF("contact_email", "note")
+      .select(collate(col("contact_email"), "UTF8_LCASE").as("contact_email"), col("note"))
+    assert(df.schema("contact_email").dataType != org.apache.spark.sql.types.StringType)
+    val hits = Validate.piiScan(df).as[(String, String, String)].collect().toSeq
+    assert(hits == Seq(("contact_email", "raw@real-domain.fr", "email")))
+  }
+
   test("policy catalog rejects unsecured PII columns (validate_pii_metadata)") {
     val ex = intercept[IllegalArgumentException] {
       PolicyCatalog(Map("m" -> Map("c" -> ColumnPolicy(pii = true))))

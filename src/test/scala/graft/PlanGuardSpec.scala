@@ -149,9 +149,10 @@ class PlanGuardSpec extends SparkSpec {
     "q_erasure",
     // hourly-store build + TTL directory expiry (|days|-bounded listing)
     "q_retention_ttl",
-    // Mondrian recursion: each build job is one bisection round (group
-    // stats + localCheckpoint), bounded by ceil(log2(n/k)) — the CC /
-    // k-means iterative shape
+    // Mondrian recursion: the global ranges, then either distributed
+    // bisection rounds (group stats + localCheckpoint each) or — once
+    // groups fit a task, at sf0.001 from round 0 — one exchange, the
+    // in-task finish's checkpoint and the deepest-round read
     "q_mondrian",
     "q_mondrian_ldiv",    // same recursion + per-round diversity guard
     "q_mondrian_tclose",  // same recursion + per-round TVD guard
@@ -203,6 +204,11 @@ class PlanGuardSpec extends SparkSpec {
     "q_compact_serve"     // build + append + compact the BM25 store in-query
   )
 
+  /** Build-job budget of every q_mondrian* query: the measured 12 (the
+    * t-closeness variant; the others run 8) plus AQE headroom.
+    */
+  private val MondrianBuildJobs = 16
+
   /** Warm Tables' per-session memo: the FIRST read of each parquet table
     * fires one footer/schema-inference job, which would otherwise be
     * miscounted below as a builder pre-action.
@@ -244,12 +250,12 @@ class PlanGuardSpec extends SparkSpec {
         // membership probe + five staged writes (two kept-leg anti-joins,
         // postings/docs re-derivations, stats recompute), each carrying
         // its own AQE shuffle sub-jobs — fixed writes, zero iteration.
-        // The guarded Mondrian variants' budget is also structural: the
-        // scale-safe early-round rank (range sampling + offsets
-        // aggregate + broadcast, Mondrian.withRank) adds ~3 bounded AQE
-        // stages for each of the <= log2(parallelism) early rounds, and
-        // the l/t guards' side aggregates double the per-round stage
-        // count — rounds stay capped at maxRounds, zero open iteration.
+        // The q_mondrian* budget is one constant: at sf0.001 every
+        // variant switches to the in-task finish at round 0, so the build
+        // is the global-range aggregate, the t-closeness census, one
+        // `_gid` exchange, the finish's checkpoint and the deepest-round
+        // read — a fixed job count, no per-round term (8 observed, 12
+        // with the t-closeness census).
         // q_fsck_stores is the widest fixed-build query: two shard
         // writes, a k-means build + cluster-partitioned index write, a
         // snapshot bootstrap + merge, an EventStatsStore bootstrap +
@@ -269,7 +275,7 @@ class PlanGuardSpec extends SparkSpec {
           // census probe itself (~121 observed) — still fixed store
           // count, zero iteration
           else if (name == "q_fsck_stores") 135
-          else if (name == "q_mondrian_ldiv" || name == "q_mondrian_tclose") 80
+          else if (name.startsWith("q_mondrian")) MondrianBuildJobs
           else if (name == "q_compact_serve") 55
           // 8 datasets x (2 authorizes + 2 charge writes) + schedule
           // collect + the final composed read
@@ -354,6 +360,41 @@ class PlanGuardSpec extends SparkSpec {
         .explainString(ExplainMode.fromString("formatted"))
       assert(plan.contains(fragment), s"expected `$fragment` in:\n$plan")
     }
+  }
+
+  test("job bound: Pipeline.geoRelease + Validate.piiScan on a seeded services frame") {
+    // 20k synthesized services (the ServicesSynth rules over a seeded key
+    // range, as the anonymize_batch benchmark generates them): the geo
+    // release finishes Mondrian in-task after the global ranges, and the
+    // PII scan is one pass however many string columns the mart has. The
+    // round loop ran ~6 jobs per round (~80 here) and the per-column
+    // scan two per string column; both bounds are structural now.
+    val s = spark.newSession() // the synthesis reads a `customer` temp view
+    s.range(7000001L, 7020001L, 1, 4)
+      .selectExpr("id as c_custkey",
+        "concat('Customer#', lpad(cast(id as string), 9, '0')) as c_name")
+      .createOrReplaceTempView("customer")
+    val synth = s.sql(graft.queries.ServicesSynth.sql)
+    val staged = graft.pipeline.Pipeline.staging(synth)
+    val mart = graft.pipeline.Pipeline.run(synth)
+    val sc = spark.sparkContext
+    def jobs(group: String)(action: => Long): (Long, Int) = {
+      sc.setJobGroup(group, group, interruptOnCancel = false)
+      val out = try action finally sc.clearJobGroup()
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+      (out, sc.statusTracker.getJobIdsForGroup(group).length)
+    }
+    val (nGroups, geoJobs) = jobs("jobbound-geo")(
+      graft.pipeline.Pipeline.geoRelease(staged, 5).get.count())
+    val (nHits, scanJobs) = jobs("jobbound-scan")(
+      graft.validate.Validate.piiScan(mart).count())
+    assert(nGroups > 1000L, s"the release must actually split: $nGroups groups")
+    assert(nHits == 0L, s"$nHits PII hits in the mart")
+    // 11 observed: the under-k probe, the global ranges, the `_gid`
+    // exchange, the finish's checkpoint, the deepest-round read and the
+    // envelope aggregate, each AQE stage a job
+    assert(geoJobs <= 14, s"geoRelease ran $geoJobs jobs")
+    assert(scanJobs <= 4, s"piiScan ran $scanJobs jobs")
   }
 
   test("canon guard: no compared output carries decimal or array columns") {
