@@ -190,6 +190,15 @@ object CurateCli {
     * merged losslessly — so the batch stats can report a
     * `profile_distinct_est` for the WHOLE corpus without ever re-reading
     * it, and quantile telemetry serves off a few-KB store.
+    *
+    * Leg order: the gates, the corpus dedup, the shard write, the
+    * admission log and the corpus append run in sequence. Then the band
+    * index write or append, BM25, dense, exact, profile, agg and the
+    * shard read-back audit run at the same time under one
+    * [[graft.operators.Par.run]]: each writes its own root (the audit
+    * writes nothing) from the landed shard files, the batch input or —
+    * bootstraps — the corpus appended before them. The corpus and store
+    * compactions follow in sequence, after every reader of the corpus.
     */
   def runIncremental(
       spark: SparkSession,
@@ -329,26 +338,32 @@ object CurateCli {
             landed.select(col("doc_id")), cg.purpose, cg.admittedAt)
         }
         landed.write.mode("append").parquet(corpusDir)
-        if (bootstrap)
-          Dedup.writeBandIndex(
-            Dedup.buildBandIndex(landed, "doc_id", "text"), indexDir)
-        else Dedup.appendBandIndex(landed, "text", indexDir)
+        // the serving legs below write disjoint roots and read only the
+        // landed shard files, the batch input and (bootstraps) the corpus
+        // appended above, so they overlap in ONE Par.run; a failed leg
+        // cancels its siblings' jobs and the batch rethrows only once
+        // every leg has stopped (Par scaladoc). `run` returns after every
+        // leg, so the drift vars the legs set are visible below it.
+        def bandLeg(): Unit =
+          if (bootstrap)
+            Dedup.writeBandIndex(
+              Dedup.buildBandIndex(landed, "doc_id", "text"), indexDir)
+          else Dedup.appendBandIndex(landed, "text", indexDir)
         // optional serving-side BM25 index over the accumulated corpus.
         // First build (or late enablement on existing state) indexes the
         // corpus READ-BACK — everything admitted so far — then each batch
         // appends only its landed rows (exact stats merge, Bm25 scaladoc)
-        if (searchIndex) {
+        def searchLeg(): Unit =
           if (!exists(s"$searchDir/stats"))
             graft.text.Bm25.writeSearchIndex(
               spark.read.parquet(corpusDir), "doc_id", col("text"), searchDir)
           else
             graft.text.Bm25.appendSearchIndex(landed, "doc_id", col("text"), searchDir)
-        }
         // optional dense serving leg: IVF over the batch's embeddings.
         // Vectors come from the INPUT frame (the corpus stores none),
         // pruned to the landed doc ids; neither side's lineage reads the
         // dense index's own files, so the append cannot invalidate it.
-        if (hybridIndex) {
+        def denseLeg(): Unit = {
           import graft.similarity.Ivf
           require(docs.columns.contains("embedding"),
             "curate --hybrid: the batch input must carry an `embedding` " +
@@ -380,7 +395,7 @@ object CurateCli {
         // audit frozen-order drift BEFORE appending (the Ivf convention —
         // appends stay threshold-exact regardless, drift only erodes
         // prefix pruning; rebuild when it crosses the caller's budget).
-        if (exactIndex) {
+        def exactLeg(): Unit = {
           import graft.dedup.SetSimJoin
           def setsOf(df: DataFrame) = df.select(col("doc_id"),
             array_distinct(transform(
@@ -400,7 +415,7 @@ object CurateCli {
         // the stored HLL/HDR pair — losslessly identical to profiling the
         // whole accumulated corpus (ProfileStore scaladoc), so telemetry
         // reads never touch the corpus
-        if (profileStats) {
+        def profileLeg(): Unit = {
           import graft.sketch.ProfileStore
           val profDir = s"$outDir/profile"
           if (!ProfileStore.exists(spark, profDir))
@@ -416,7 +431,7 @@ object CurateCli {
         // groupBy over the accumulated corpus and, unlike the sketches,
         // exactly erasable (runErase). First enable bootstraps from the
         // corpus read-back; later batches merge only their landed states.
-        if (aggStats) {
+        def aggLeg(): Unit = {
           import graft.operators.AggStore
           val aggDir = s"$outDir/agg"
           val states =
@@ -429,7 +444,17 @@ object CurateCli {
           AggStore.merge(spark, aggDir, states, Seq("source"),
             buckets = AggBuckets, batchId = batchId.toLong)
         }
-        auditShards(spark, shardDir, nFresh)
+        var audit = false
+        graft.operators.Par.unit(Seq[(Boolean, () => Unit)](
+          (true, () => bandLeg()),
+          (searchIndex, () => searchLeg()),
+          (hybridIndex, () => denseLeg()),
+          (exactIndex, () => exactLeg()),
+          (profileStats, () => profileLeg()),
+          (aggStats, () => aggLeg()),
+          (true, () => audit = auditShards(spark, shardDir, nFresh)))
+          .collect { case (true, leg) => leg }: _*)
+        audit
       }
     val profileEst =
       if (profileStats && graft.sketch.ProfileStore.exists(spark, s"$outDir/profile"))
@@ -717,6 +742,20 @@ object CurateCli {
     * pending facts capture, so healing that sweep later cannot
     * resurrect an erased subject's aggregate facts.
     *
+    * Leg order: the key aggregate, the facts capture, the pending-
+    * rectification purge and the corpus rewrite run in sequence (each
+    * later step reads what the earlier one settled). Then the store legs
+    * — agg (its `agg-erased` failpoint fires inside the leg, right after
+    * its commit), band index, BM25, dense, exact, and one leg per touched
+    * `shards/batch=N` directory — run at the same time under one
+    * [[graft.operators.Par.run]]: they write disjoint roots, each commits
+    * and recovers on its own, and none reads another's root. A failed
+    * leg cancels its siblings' jobs, and the sweep rethrows (and
+    * releases its lease) only once every leg has stopped. The profile
+    * ledger and the facts delete come last, in sequence: the delete is
+    * the sweep's completion mark. [[graft.operators.Lease.renew]] runs on
+    * the calling thread before and after the overlapped legs.
+    *
     * Scope bound: STREAMING checkpoint state is outside this sweep — an
     * in-flight subject session lives in the state store until its
     * event-time timeout, see
@@ -843,8 +882,8 @@ object CurateCli {
       else 0L
     failpoint("corpus-purged")
     // heartbeat: each store leg of a 100 TB sweep can be long on its
-    // own — re-stamp the lease between legs so the holder is never
-    // presumed dead while a leg runs (Lease.renew scaladoc)
+    // own — re-stamp the lease around the overlapped legs so the holder
+    // is never presumed dead while they run (Lease.renew scaladoc)
     graft.operators.Lease.renew(spark, outDir)
     // maintained per-source aggregate: cnt/sum subtract exactly from the
     // captured facts; min/max rebuild from the RETAINED corpus (the
@@ -852,83 +891,81 @@ object CurateCli {
     // (AggStore.erase scaladoc). Erased subjects leave no trace in the
     // served stats — the same obligation the sketch profile meets by
     // rebuild, met here exactly and incrementally.
-    val nAgg =
-      if (hasAgg && exists(s"$erasedFactsPath/_SUCCESS")) {
-        // per-leg commit id from the capture's STAMP (see the capture
-        // write above); an empty or pre-nonce capture falls back to the
-        // content id — both make the sweep's own replays exact no-ops
-        val capForNonce = spark.read.parquet(erasedFactsPath)
-        val sweepNonce =
-          if (!capForNonce.columns.contains("_nonce")) eraseBatch
-          else {
-            val r = capForNonce.agg(max(col("_nonce"))).head()
-            if (r.isNullAt(0)) eraseBatch else r.getLong(0)
-          }
-        // the min/max rebuild reads the retained corpus through the agg
-        // store's lens: ids still pending rectification carry their OLD
-        // n_tokens (the post-purge capture holds exactly those ids), so
-        // the cross-check compares like with like — once the heal's agg
-        // legs commit, the lens is the corpus itself
-        val retained =
-          if (!exists(corpusDir)) None
-          else if (aggLags && exists(s"$pendingPath/_SUCCESS")) {
-            val over = spark.read.parquet(pendingPath)
-              .select(col("doc_id"), col("n_tokens").as("_old_nt"))
-            Some(spark.read.parquet(corpusDir)
-              .join(broadcast(over), Seq("doc_id"), "left")
-              .select(col("source"),
-                coalesce(col("_old_nt"), col("n_tokens")).as("n_tokens")))
-          } else
-            Some(spark.read.parquet(corpusDir)
-              .select(col("source"), col("n_tokens")))
-        graft.operators.AggStore.erase(
-          spark, aggDir,
-          spark.read.parquet(erasedFactsPath)
-            .select(col("source"), col("n_tokens")),
-          Seq("source"), col("n_tokens").cast("long"),
-          buckets = AggBuckets,
-          batchId = PartitionSwap.legBatchId(sweepNonce, "erase-agg"),
-          retainedFacts = retained)
-      } else 0L
-    failpoint("agg-erased")
-    graft.operators.Lease.renew(spark, outDir)
-    val nBand =
-      if (exists(s"$outDir/index/meta"))
-        graft.dedup.Dedup.eraseFromBandIndex(spark, s"$outDir/index", keys, "doc_id")
-      else 0L
-    // the BM25 decrement is self-contained: the index's docs leg knows
-    // exactly which requested ids it holds (zero-token docs included),
-    // so no corpus-derived count crosses stores and a replay of a
-    // crashed sweep cannot over- or under-decrement _n_docs
-    val nSearch =
-      if (exists(s"$outDir/search/stats"))
-        graft.text.Bm25.eraseFromSearchIndex(spark, s"$outDir/search", keys, "doc_id")
-      else 0L
-    graft.operators.Lease.renew(spark, outDir)
-    val nDense =
-      if (exists(s"$outDir/dense/centroids"))
-        graft.similarity.Ivf.eraseFromIndex(spark, s"$outDir/dense", keys, "doc_id")
-      else 0L
-    val nExact =
-      if (exists(s"$outDir/exact/meta"))
-        graft.dedup.SetSimJoin.eraseFromIndex(spark, s"$outDir/exact", keys, "doc_id")
-      else 0L
-    // every per-batch shard directory (the durable training record):
-    // ONE partitioned probe over all batch directories (`batch=` comes
-    // back as a partition column) finds which directories hold any of
-    // the keys, then the per-directory rewrites touch ONLY those — job
-    // count scales with directories MATCHED, never with directories
-    // ACCUMULATED (at a year of daily epochs the old per-directory loop
-    // was ~365 sequential probe jobs per sweep). The AggStore.merge
-    // touched-partition shape, applied to the shard tree.
-    val nShards =
-      if (!exists(s"$outDir/shards")) 0L
-      else
-        Shards.touchedBatchDirs(spark, s"$outDir/shards", keys, "doc_id")
-          .map(b => Shards.eraseByKey(
-            spark, s"$outDir/shards/$b", keys, "doc_id",
-            orderCols = Seq("source")))
-          .sum
+    def aggLeg(): Long = {
+      val n =
+        if (hasAgg && exists(s"$erasedFactsPath/_SUCCESS")) {
+          // per-leg commit id from the capture's STAMP (see the capture
+          // write above); an empty or pre-nonce capture falls back to the
+          // content id — both make the sweep's own replays exact no-ops
+          val capForNonce = spark.read.parquet(erasedFactsPath)
+          val sweepNonce =
+            if (!capForNonce.columns.contains("_nonce")) eraseBatch
+            else {
+              val r = capForNonce.agg(max(col("_nonce"))).head()
+              if (r.isNullAt(0)) eraseBatch else r.getLong(0)
+            }
+          // the min/max rebuild reads the retained corpus through the agg
+          // store's lens: ids still pending rectification carry their OLD
+          // n_tokens (the post-purge capture holds exactly those ids), so
+          // the cross-check compares like with like — once the heal's agg
+          // legs commit, the lens is the corpus itself
+          val retained =
+            if (!exists(corpusDir)) None
+            else if (aggLags && exists(s"$pendingPath/_SUCCESS")) {
+              val over = spark.read.parquet(pendingPath)
+                .select(col("doc_id"), col("n_tokens").as("_old_nt"))
+              Some(spark.read.parquet(corpusDir)
+                .join(broadcast(over), Seq("doc_id"), "left")
+                .select(col("source"),
+                  coalesce(col("_old_nt"), col("n_tokens")).as("n_tokens")))
+            } else
+              Some(spark.read.parquet(corpusDir)
+                .select(col("source"), col("n_tokens")))
+          graft.operators.AggStore.erase(
+            spark, aggDir,
+            spark.read.parquet(erasedFactsPath)
+              .select(col("source"), col("n_tokens")),
+            Seq("source"), col("n_tokens").cast("long"),
+            buckets = AggBuckets,
+            batchId = PartitionSwap.legBatchId(sweepNonce, "erase-agg"),
+            retainedFacts = retained)
+        } else 0L
+      failpoint("agg-erased")
+      n
+    }
+    // the store legs write disjoint roots (agg/, index/, search/, dense/,
+    // exact/, shards/batch=N), each commits and recovers on its own, and
+    // none reads another's root — only the corpus purged above and the
+    // facts capture, both settled before this point — so they overlap;
+    // a failed leg cancels its siblings' jobs and the sweep rethrows only
+    // once every leg has stopped (Par scaladoc), so the lease outlives
+    // every write. The BM25 decrement is self-contained: the index's
+    // docs leg knows exactly which requested ids it holds (zero-token
+    // docs included), so no corpus-derived count crosses stores and a
+    // replay of a crashed sweep cannot over- or under-decrement _n_docs.
+    // The shard leg probes ALL batch directories in ONE partitioned scan
+    // (`batch=` comes back as a partition column) and rewrites ONLY the
+    // matched ones, overlapped — job count scales with directories
+    // MATCHED, never with directories ACCUMULATED (the AggStore.merge
+    // touched-partition shape, applied to the shard tree).
+    def ifExists(marker: String)(leg: => Long): Long =
+      if (exists(s"$outDir/$marker")) leg else 0L
+    val Seq(nAgg, nBand, nSearch, nDense, nExact, nShards) =
+      graft.operators.Par.run[Long](Seq(
+        () => aggLeg(),
+        () => ifExists("index/meta")(graft.dedup.Dedup.eraseFromBandIndex(
+          spark, s"$outDir/index", keys, "doc_id")),
+        () => ifExists("search/stats")(graft.text.Bm25.eraseFromSearchIndex(
+          spark, s"$outDir/search", keys, "doc_id")),
+        () => ifExists("dense/centroids")(graft.similarity.Ivf.eraseFromIndex(
+          spark, s"$outDir/dense", keys, "doc_id")),
+        () => ifExists("exact/meta")(graft.dedup.SetSimJoin.eraseFromIndex(
+          spark, s"$outDir/exact", keys, "doc_id")),
+        () => ifExists("shards")(graft.operators.Par.run[Long](
+          Shards.touchedBatchDirs(spark, s"$outDir/shards", keys, "doc_id")
+            .map(b => () => Shards.eraseByKey(
+              spark, s"$outDir/shards/$b", keys, "doc_id",
+              orderCols = Seq("source")))).sum)))
     graft.operators.Lease.renew(spark, outDir)
     // sketch profile: charge the ledger, rebuild once past budget
     var rebuilt = false
@@ -1744,6 +1781,15 @@ object CurateCli {
     * `profileBudget`. The dense IVF leg holds INPUT embeddings (the
     * corpus stores none), so it rectifies only when the corrected file
     * carries an `embedding` column.
+    *
+    * Leg order: the gate aggregate, the facts capture and the corpus
+    * rewrite run in sequence. Then agg (subtract and merge; its
+    * `agg-updated` failpoint fires inside the leg, after the merge
+    * commits), band index, BM25, exact, dense and one leg per
+    * `shards/batch=N` directory run at the same time under one
+    * [[graft.operators.Par.run]] — the [[runErase]] argument and failure
+    * semantics. The profile ledger and the facts delete follow in
+    * sequence.
     */
   def runRectify(
       spark: SparkSession,
@@ -1837,85 +1883,91 @@ object CurateCli {
         Rectify.updateByKey(spark, corpusDir, derived, "doc_id")
       else 0L
     failpoint("corpus-updated")
+    // heartbeat around the overlapped legs (Lease.renew scaladoc)
+    graft.operators.Lease.renew(spark, outDir)
 
     // maintained per-source aggregate: subtract the captured OLD facts
     // (cnt/sum exactly; min/max rebuilt from the corpus MINUS the
     // subjects), then merge the corrected facts back — group for group
     // the result is a one-shot groupBy over the corrected corpus
     val aggDir = s"$outDir/agg"
-    val nAgg =
-      if (exists(aggDir) && nMatched > 0) {
-        import graft.operators.AggStore
-        val facts = factsOpt.get
-        val matchedIds = facts.select(col("doc_id")).distinct()
-        val retained =
-          if (exists(corpusDir))
-            Some(spark.read.parquet(corpusDir)
-              .join(broadcast(matchedIds), Seq("doc_id"), "left_anti")
-              .select(col("source"), col("n_tokens")))
-          else None
-        // per-leg ids ([[PartitionSwap.legBatchId]]): several legs commit
-        // into shared _batches namespaces, and additive offsets from a
-        // 64-bit content hash can land one sweep's offset id on another
-        // sweep's base (or a streaming epoch's small integer id),
-        // silently no-opping a leg via alreadyApplied
-        val n = AggStore.erase(spark, aggDir,
-          facts.select(col("source"), col("n_tokens")),
-          Seq("source"), col("n_tokens").cast("long"),
-          buckets = AggBuckets,
-          batchId = PartitionSwap.legBatchId(batchBase, "rectify-agg-sub"),
-          retainedFacts = retained)
-        val newFacts = facts.select(col("doc_id"), col("source"))
-          .join(broadcast(derived.select(col("doc_id"), col("n_tokens"))),
-            Seq("doc_id"))
-        AggStore.merge(spark, aggDir,
-          AggStore.aggregate(newFacts, Seq("source"), col("n_tokens").cast("long")),
-          Seq("source"), buckets = AggBuckets,
-          batchId = PartitionSwap.legBatchId(batchBase, "rectify-agg-merge"))
-        n
-      } else 0L
-    failpoint("agg-updated")
-    // heartbeat between legs (Lease.renew scaladoc)
-    graft.operators.Lease.renew(spark, outDir)
+    def aggLeg(): Long = {
+      val nAgg =
+        if (exists(aggDir) && nMatched > 0) {
+          import graft.operators.AggStore
+          val facts = factsOpt.get
+          val matchedIds = facts.select(col("doc_id")).distinct()
+          val retained =
+            if (exists(corpusDir))
+              Some(spark.read.parquet(corpusDir)
+                .join(broadcast(matchedIds), Seq("doc_id"), "left_anti")
+                .select(col("source"), col("n_tokens")))
+            else None
+          // per-leg ids ([[PartitionSwap.legBatchId]]): several legs commit
+          // into shared _batches namespaces, and additive offsets from a
+          // 64-bit content hash can land one sweep's offset id on another
+          // sweep's base (or a streaming epoch's small integer id),
+          // silently no-opping a leg via alreadyApplied
+          val n = AggStore.erase(spark, aggDir,
+            facts.select(col("source"), col("n_tokens")),
+            Seq("source"), col("n_tokens").cast("long"),
+            buckets = AggBuckets,
+            batchId = PartitionSwap.legBatchId(batchBase, "rectify-agg-sub"),
+            retainedFacts = retained)
+          val newFacts = facts.select(col("doc_id"), col("source"))
+            .join(broadcast(derived.select(col("doc_id"), col("n_tokens"))),
+              Seq("doc_id"))
+          AggStore.merge(spark, aggDir,
+            AggStore.aggregate(newFacts, Seq("source"), col("n_tokens").cast("long")),
+            Seq("source"), buckets = AggBuckets,
+            batchId = PartitionSwap.legBatchId(batchBase, "rectify-agg-merge"))
+          n
+        } else 0L
+      failpoint("agg-updated")
+      nAgg
+    }
 
+    // the store legs write disjoint roots and read only the corrected
+    // file, the facts capture and the rewritten corpus — all settled
+    // above — so they overlap (the runErase argument; Par scaladoc for
+    // the failure semantics). Shard rows rectify in place, one leg per
+    // batch directory.
+    def ifExists(marker: String)(leg: => Long): Long =
+      if (exists(s"$outDir/$marker")) leg else 0L
     val textOnly = derived.select(col("doc_id"), col("text"))
-    val nBand =
-      if (exists(s"$outDir/index/meta"))
-        graft.dedup.Dedup.rectifyBandIndex(textOnly, "text", s"$outDir/index",
-          Some(PartitionSwap.legBatchId(batchBase, "rectify-band")))
-      else 0L
-    val nSearch =
-      if (exists(s"$outDir/search/stats"))
-        graft.text.Bm25.rectifySearchIndex(spark, s"$outDir/search", textOnly,
-          "doc_id", col("text"),
-          Some(PartitionSwap.legBatchId(batchBase, "rectify-search")))
-      else 0L
-    graft.operators.Lease.renew(spark, outDir)
-    val nExact =
-      if (exists(s"$outDir/exact/meta")) {
+    val shardDirs =
+      if (!exists(s"$outDir/shards")) Seq.empty
+      else fs.listStatus(new org.apache.hadoop.fs.Path(s"$outDir/shards"))
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
+        .map(_.getPath.toString).toSeq
+    val legs = graft.operators.Par.run[Long](Seq(
+      () => aggLeg(),
+      () => ifExists("index/meta")(graft.dedup.Dedup.rectifyBandIndex(
+        textOnly, "text", s"$outDir/index",
+        Some(PartitionSwap.legBatchId(batchBase, "rectify-band")))),
+      () => ifExists("search/stats")(graft.text.Bm25.rectifySearchIndex(
+        spark, s"$outDir/search", textOnly, "doc_id", col("text"),
+        Some(PartitionSwap.legBatchId(batchBase, "rectify-search")))),
+      () => ifExists("exact/meta") {
         val sets = derived.select(col("doc_id"),
           array_distinct(transform(
             graft.dedup.Dedup.wordShingles(col("text"), 3), x => md5(x))).as("sh"))
         graft.dedup.SetSimJoin.rectifyIndex(spark, s"$outDir/exact", sets,
           "doc_id", "sh",
           Some(PartitionSwap.legBatchId(batchBase, "rectify-exact")))
-      } else 0L
-    val nDense =
-      if (exists(s"$outDir/dense/centroids") &&
-        correctedRaw.columns.contains("embedding"))
-        graft.similarity.Ivf.rectifyIndex(spark, s"$outDir/dense",
-          correctedRaw.select(col("doc_id"), col("embedding")),
-          "doc_id", "embedding")
-      else 0L
-    val nShardRows =
-      if (!exists(s"$outDir/shards")) 0L
-      else
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$outDir/shards"))
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-          .map(s => Shards.rectifyByKey(
-            spark, s.getPath.toString, derived, "doc_id",
-            orderCols = Seq("source")))
-          .sum
+      },
+      () =>
+        if (correctedRaw.columns.contains("embedding"))
+          ifExists("dense/centroids")(graft.similarity.Ivf.rectifyIndex(
+            spark, s"$outDir/dense",
+            correctedRaw.select(col("doc_id"), col("embedding")),
+            "doc_id", "embedding"))
+        else 0L) ++
+      shardDirs.map(d => () => Shards.rectifyByKey(
+        spark, d, derived, "doc_id", orderCols = Seq("source"))))
+    val Seq(nAgg, nBand, nSearch, nExact, nDense) = legs.take(5)
+    val nShardRows = legs.drop(5).sum
+    graft.operators.Lease.renew(spark, outDir)
 
     // sketch profile: the old text's contribution cannot be subtracted —
     // charge the same staleness ledger erasure charges, rebuild from the

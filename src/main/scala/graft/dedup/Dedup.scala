@@ -115,18 +115,6 @@ object Dedup {
     exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH band hashes: split the signature into `bands` groups of
-    * `rowsPerBand` and hash each group. Two docs collide on a band iff that
-    * slice of their signatures is identical.
-    */
-  def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Seq[Column] =
-    (0 until bands).map { b =>
-      md5(concat_ws("|",
-        (0 until rowsPerBand)
-          .map(r => element_at(sig, b * rowsPerBand + r + 1).cast("string")): _*))
-        .as(s"band_$b")
-    }
-
   /** doc -> (doc id, band_0..band_{B-1}) via the table-scale minhash path. */
   def minhashBands(
       df: DataFrame,

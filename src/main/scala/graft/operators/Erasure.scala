@@ -53,23 +53,6 @@ object Erasure {
     if (!fs.exists(livePath) && fs.exists(retired)) fs.rename(retired, livePath)
   }
 
-  /** Rewrite `live` all-or-nothing: `write(tmp)` produces the new
-    * content, then retire/promote renames swap it in. A crash before the
-    * promote never loses the old data (see [[recoverRetired]]).
-    */
-  def rewriteSwap(spark: SparkSession, live: String, write: String => Unit): Unit = {
-    val livePath = new org.apache.hadoop.fs.Path(live)
-    val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"${live}__erasing")
-    val old = new org.apache.hadoop.fs.Path(s"${live}__retired")
-    fs.delete(tmp, true) // stale leftovers from a crashed run
-    fs.delete(old, true)
-    write(tmp.toString)
-    fs.rename(livePath, old)
-    fs.rename(tmp, livePath)
-    fs.delete(old, true)
-  }
-
   /** Observed-count accessor with an exactness fallback: AQE's
     * empty-relation propagation can replace an all-filtered-out subtree
     * — its `CollectMetrics` (observe) nodes included — so a sweep that
@@ -98,16 +81,6 @@ object Erasure {
     if (!fs.exists(p) || !hasParquetFile(fs, p)) 0L
     else spark.read.parquet(dir).count()
   }
-
-  /** Count the store rows matching the erasure keys without rewriting
-    * anything — the read-only probe (access sweeps, dry runs). The
-    * erase paths do NOT call this: their counts ride the rewrite scan
-    * (see [[eraseWith]]).
-    */
-  def matchCount(spark: SparkSession, live: String, keys: DataFrame, idCol: String): Long =
-    spark.read.parquet(live)
-      .join(broadcast(keys.select(col(idCol)).distinct()), Seq(idCol), "left_semi")
-      .count()
 
   /** Single-pass erase core: stage `shape(kept)` under `<live>__erasing`
     * with observe metrics counting rows seen and rows kept on the same

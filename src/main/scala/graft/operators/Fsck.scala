@@ -736,9 +736,4 @@ object Fsck {
     }
     checks.toSeq
   }
-
-  def toDf(spark: SparkSession, checks: Seq[Check]): DataFrame = {
-    import spark.implicits._
-    checks.toDF("component", "check", "ok", "detail")
-  }
 }

@@ -148,11 +148,6 @@ object TextAnalysis {
       regexp_count(c, lit("[^A-Za-z0-9\\s]")).cast("double") / length(c).cast("double")
     ).otherwise(lit(0.0))
 
-  /** Mean token length — long-token gibberish and short-token noise both
-    * deviate from natural-language ~4-6.
-    */
-  def meanTokenLength(c: Column): Column = meanTokenLengthOf(tokens(c))
-
   /** Heuristic document quality score in [0,1]: length sweet-spot, low punct
     * noise, some stopword mass (fluent prose), sane mean token length.
     * Deterministic arithmetic only.

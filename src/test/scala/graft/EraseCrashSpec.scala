@@ -99,6 +99,144 @@ class EraseCrashSpec extends SparkSpec {
       }
   }
 
+  /** Every leg's row count and content digest (its rows as sorted
+    * strings) in a state directory.
+    */
+  private def storeRows(state: String): Map[String, (Int, Int)] =
+    Seq("corpus", "index/bands", "index/shingles", "search/postings",
+      "search/docs", "search/stats", "shards/batch=0")
+      .filter(l => exists(s"$state/$l"))
+      .map { l =>
+        val rows = spark.read.parquet(s"$state/$l").collect().map(_.toString).toSeq.sorted
+        l -> (rows.size, rows.hashCode)
+      }
+      .toMap
+
+  test("a crash at agg-erased while the overlapped sibling legs still run converges to the uncrashed twin") {
+    // agg + band index + BM25: the agg leg's failpoint fires right after
+    // its commit, inside the overlapped store legs. The band and BM25
+    // legs are HELD mid-leg (an optimizer rule parks their first query
+    // over their store until the crash), so the crash deterministically
+    // lands while they run, and their first job after it must be
+    // cancelled before it writes anything
+    val work = tmp("overlap")
+    docs.write.parquet(s"$work/b0")
+    val golden = s"$work/golden"
+    assert(CurateCli.runIncremental(spark, s"$work/b0", golden, nShards = 2,
+      searchIndex = true, aggStats = true).auditOk)
+    spark.read.parquet(s"$golden/corpus").select(col("doc_id"))
+      .filter(col("doc_id") % 3 === 0).write.parquet(s"$work/keys")
+    val twin = s"$work/twin"
+    copyDir(golden, twin)
+    CurateCli.runErase(spark, s"$work/keys", twin)
+
+    val state = s"$work/state"
+    copyDir(golden, state)
+    val sc = spark.sparkContext
+    val hold = new HoldReads(Seq(s"$state/index", s"$state/search"))
+    val jobs = new TaggedJobs
+    val extra = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = extra :+ hold
+    sc.addSparkListener(jobs)
+    var heldAtCrash = 0
+    val crash =
+      try intercept[Crash] {
+        CurateCli.runErase(spark, s"$work/keys", state, failpoint = at =>
+          if (at == "agg-erased") {
+            jobs.tag = sc.getJobTags().find(_.startsWith("graft-par-")).get
+            heldAtCrash = hold.awaitHeld(2)
+            hold.crashed = true
+            throw Crash(at)
+          })
+      } finally spark.experimental.extraOptimizations = extra
+    val thrownAt = System.currentTimeMillis()
+    val resumedAtThrow = hold.resumed.get()
+    assert(crash.at == "agg-erased")
+    assert(heldAtCrash >= 2, "the band and BM25 legs must be mid-leg at the crash")
+    // the lease is released only after every leg stopped: it is gone when
+    // the verb throws, and every job of the overlapped legs — the held
+    // legs' first jobs after the crash included — ended before that
+    assert(!exists(s"$state/.lease"))
+    org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+    sc.removeSparkListener(jobs)
+    assert(resumedAtThrow >= 2, "the held legs must resume before the verb returns")
+    assert(jobs.tagged.nonEmpty)
+    jobs.tagged.foreach(id => assert(jobs.ended.get(id) <= thrownAt,
+      s"job $id of a sweep leg ended after the sweep threw"))
+    // the held legs were cancelled before they wrote: their stores are
+    // still the pre-sweep ones, with no commit started
+    val held = Seq("index/bands", "index/shingles", "search/postings",
+      "search/docs", "search/stats")
+    assert(storeRows(state).filter(l => held.contains(l._1)) ==
+      storeRows(golden).filter(l => held.contains(l._1)),
+      "a cancelled leg wrote to its store")
+    assert(!exists(s"$state/search/_batches/_pending") &&
+      !exists(s"$state/index/_batches/_pending"),
+      "a cancelled leg must not have started its commit")
+
+    // the replay converges to the uncrashed twin, leaves no stage behind
+    // and audits clean
+    CurateCli.runErase(spark, s"$work/keys", state)
+    assert(storeRows(state) == storeRows(twin),
+      "replayed legs must equal the uncrashed twin's")
+    assert(aggRows(AggStore.serve(spark, s"$state/agg")) ==
+      aggRows(AggStore.serve(spark, s"$twin/agg")))
+    Seq("index", "search").foreach(l =>
+      assert(!exists(s"$state/$l/.swap-stage"), s"$l/.swap-stage left behind"))
+    assert(!exists(s"$state/agg.merge-stage"))
+    val fsck = graft.operators.Fsck.state(spark, state)
+    assert(fsck.forall(_.ok), fsck.filterNot(_.ok).mkString("; "))
+  }
+
+  /** Parks the first query of each thread that reads under `roots` until
+    * `crashed`, then lets it go on (after Par has had time to register
+    * its cancellation).
+    */
+  private final class HoldReads(roots: Seq[String])
+      extends org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    @volatile var crashed = false
+    private val held = new java.util.concurrent.atomic.AtomicInteger()
+    val resumed = new java.util.concurrent.atomic.AtomicInteger()
+    private val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+        : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+      val reads = plan.collect { case l: LogicalRelation => l.relation }
+        .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toString) }
+        .flatten
+      if (!crashed && reads.exists(p => roots.exists(p.contains)) &&
+          threads.add(Thread.currentThread().getId)) {
+        held.incrementAndGet()
+        val deadline = System.currentTimeMillis() + 60000L
+        while (!crashed && System.currentTimeMillis() < deadline) Thread.sleep(5)
+        Thread.sleep(200)
+        resumed.incrementAndGet()
+      }
+      plan
+    }
+    def awaitHeld(n: Int): Int = {
+      val deadline = System.currentTimeMillis() + 60000L
+      while (held.get() < n && System.currentTimeMillis() < deadline) Thread.sleep(5)
+      held.get()
+    }
+  }
+
+  /** End times of the jobs carrying `tag` (set at the crash). */
+  private final class TaggedJobs extends org.apache.spark.scheduler.SparkListener {
+    @volatile var tag: String = "-"
+    private val tags = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      tags.put(j.jobId, Option(j.properties.getProperty("spark.job.tags")).getOrElse(""))
+    override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+      ended.put(j.jobId, j.time)
+    def tagged: Seq[Int] = {
+      import scala.jdk.CollectionConverters._
+      tags.asScala.collect { case (id, t) if t.split(',').contains(tag) => id }.toSeq
+    }
+  }
+
   test("a DIFFERENT erasure is refused while a crashed sweep's facts are pending") {
     val work = tmp("refuse")
     val state = s"$work/state"

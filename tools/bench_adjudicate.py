@@ -28,13 +28,84 @@ whose truncated `tail` string still carries per-query numbers. RUNx.json are
 this round's captures (raw bench lines); per query the MIN across captures
 is compared — min-vs-min is the noise-robust statistic.
 
-Exit code: 0 when every shared query is within the band, 1 otherwise.
+STABLE-SHIFT RULE: when a query's driver samples (RUN1's) agree with each
+other (max/min <= 1.3x) and every one of them sits >= 1.3x off the prior
+driver median (PREV's samples, or PREV's value when it carries none), the
+shift is classified REAL, not noise, whatever the min-vs-min band says: a
+stable regression inside the 1.5x band is still a regression (VERDICT r14's
+q_distinct_sample and q_retention_ttl), and a stable improvement is a real
+one.
+
+Exit code: 0 when every shared query is within the band and no stable
+regression is found, 1 otherwise.
+
+Self-check of the stable-shift rule on synthetic inputs:
+  python3 tools/bench_adjudicate.py --self-check
 """
 import json
 import re
 import sys
 
 BAND = 1.5  # min-vs-min ratio beyond which a named plan diff is required
+AGREE = 1.3  # driver samples agree when max/min is within this
+SHIFT = 1.3  # ... and are a real shift when all sit this far off the prior
+
+
+def median(xs):
+    xs = sorted(xs)
+    n = len(xs)
+    return xs[n // 2] if n % 2 else (xs[n // 2 - 1] + xs[n // 2]) / 2
+
+
+def stable_shift(samples, prior_median):
+    """'regression' or 'improvement' when the driver samples agree and all
+    sit >= SHIFT off the prior driver median; None otherwise (noise, or
+    too few samples to tell)."""
+    if len(samples) < 2 or prior_median <= 0 or min(samples) <= 0:
+        return None
+    if max(samples) / min(samples) > AGREE:
+        return None
+    if min(samples) >= SHIFT * prior_median:
+        return "regression"
+    if max(samples) * SHIFT <= prior_median:
+        return "improvement"
+    return None
+
+
+def self_check():
+    assert stable_shift([1.40, 1.45, 1.42], 1.0) == "regression"
+    assert stable_shift([0.70, 0.72, 0.75], 1.0) == "improvement"
+    # agreeing samples inside the shift band: noise
+    assert stable_shift([1.20, 1.25, 1.22], 1.0) is None
+    # samples that disagree (max/min > 1.3): noise, even if far off
+    assert stable_shift([1.40, 2.10, 1.50], 1.0) is None
+    # one sample near the prior is enough to withhold 'real'
+    assert stable_shift([1.25, 1.40, 1.42], 1.0) is None
+    assert stable_shift([1.5], 1.0) is None
+    assert stable_shift([1.5, 1.5], 0.0) is None
+    assert median([3.0, 1.0, 2.0]) == 2.0 and median([1.0, 2.0]) == 1.5
+    # end to end: a stable 1.35x regression inside the 1.5x min-vs-min
+    # band fails the adjudication; the same shift in scattered samples
+    # does not
+    import contextlib
+    import io
+    import os
+    import tempfile
+    with tempfile.TemporaryDirectory() as d:
+        def art(name, samples):
+            path = os.path.join(d, name)
+            json.dump({"queries": {"q_a": min(samples), "q_b": 1.0},
+                       "samples": {"q_a": samples, "q_b": [1.0, 1.0]}},
+                      open(path, "w"))
+            return path
+        prev = art("prev.json", [1.0, 1.02, 0.98])
+        stable = art("stable.json", [1.35, 1.37, 1.36])
+        scattered = art("scattered.json", [1.35, 1.9, 1.1])
+        with contextlib.redirect_stdout(io.StringIO()):
+            assert main(prev, [stable]) == 1
+            assert main(prev, [scattered]) == 0
+    print("bench_adjudicate self-check: ok")
+    return 0
 
 
 def load_samples(path):
@@ -160,14 +231,33 @@ def main(prev_path, run_paths):
         print(f"new this round ({len(only_cur)}): {', '.join(only_cur)}")
     if only_prev:
         print(f"dropped since prev ({len(only_prev)}): {', '.join(only_prev)}")
+    # the stable-shift rule over the driver capture (RUN1) against the
+    # prior driver median
+    driver = load_samples(run_paths[0])
+    prior = load_samples(prev_path)
+    shifts = []
+    for name in shared:
+        ss = driver.get(name)
+        if not ss:
+            continue
+        pm = median(prior[name]) if prior.get(name) else prev[name]
+        kind = stable_shift(ss, pm)
+        if kind:
+            shifts.append((name, kind, median(ss) / pm))
+    real_regressions = [s for s in shifts if s[1] == "regression"]
+    if shifts:
+        print(f"\nstable shifts (driver samples agree within {AGREE:.1f}x and "
+              f"all sit >= {SHIFT:.1f}x off the prior driver median) — REAL, "
+              "not noise:")
+        for name, kind, r in shifts:
+            print(f"  {name}: real {kind} ({r:.2f}x the prior median)")
     if flagged:
         print(f"\n{len(flagged)} queries past the {BAND:.1f}x band — each needs "
               "a named plan diff or a clean-box noise adjudication:")
         samples = [load_samples(p) for p in run_paths]
-        prev_samples = load_samples(prev_path)
         for name, ratio in flagged:
             print(f"  {name}: {ratio:.2f}x")
-            for label, smap in [("prev", prev_samples)] + [
+            for label, smap in [("prev", prior)] + [
                     (f"run{i + 1}", s) for i, s in enumerate(samples)]:
                 ss = smap.get(name)
                 if ss:
@@ -176,12 +266,15 @@ def main(prev_path, run_paths):
                     print(f"    {label} samples: "
                           f"[{', '.join(f'{x:.3f}' for x in ss)}] "
                           f"spread {spread:.2f}x")
+    if flagged or real_regressions:
         return 1
     print(f"\nall shared queries within the {BAND:.1f}x min-vs-min band")
     return 0
 
 
 if __name__ == "__main__":
+    if sys.argv[1:] == ["--self-check"]:
+        sys.exit(self_check())
     if len(sys.argv) < 3:
         raise SystemExit(__doc__)
     sys.exit(main(sys.argv[1], sys.argv[2:]))
