@@ -226,20 +226,12 @@ object CurateCli {
     val searchDir = s"$outDir/search"
     val denseDir = s"$outDir/dense"
     val exactDir = s"$outDir/exact"
-    // crash recovery for a compaction interrupted mid-swap: if the promote
-    // never landed, the retired directory IS the data — restore it before
-    // anything reads the live path (corpus and search postings alike)
-    def recoverRetired(live: String): Unit = {
-      val retired = new org.apache.hadoop.fs.Path(s"${live}__retired")
-      if (!exists(live) && fs.exists(retired))
-        fs.rename(retired, new org.apache.hadoop.fs.Path(live))
-    }
-    recoverRetired(corpusDir)
-    recoverRetired(s"$searchDir/postings")
-    recoverRetired(s"$denseDir/assigned")
-    recoverRetired(s"$exactDir/postings")
-    recoverRetired(s"$exactDir/sets")
-    graft.sketch.ProfileStore.recover(spark, s"$outDir/profile")
+    // a swap torn between retire and promote: the retired directory IS
+    // the data — restore it before anything reads the live path
+    Seq(corpusDir, s"$searchDir/postings", s"$denseDir/assigned",
+      s"$exactDir/postings", s"$exactDir/sets", s"$outDir/profile/hll",
+      s"$outDir/profile/hdr", s"$outDir/profile/kmv")
+      .foreach(graft.operators.PartitionSwap.recoverDir(spark, _))
     val bootstrap = !exists(s"$indexDir/meta")
 
     val raw = spark.read.parquet(input)
@@ -470,20 +462,10 @@ object CurateCli {
           .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
         if (nFiles < compactAt) false
         else {
-          // retire-then-promote, NOT delete-then-rename: a crash between a
-          // delete and a rename would leave the accumulated data GONE.
-          // Here the old directory survives as <live>__retired until the
-          // promote lands, and startup recovery (recoverRetired, next run)
-          // restores it if the promote never happened.
-          val tmpP = new org.apache.hadoop.fs.Path(s"${live}__compacting")
-          val oldP = new org.apache.hadoop.fs.Path(s"${live}__retired")
-          fs.delete(tmpP, true) // stale leftovers from a crashed run
-          fs.delete(oldP, true)
-          graft.operators.Compaction.compact(
-            spark, live, tmpP.toString, 128L * 1024 * 1024)
-          fs.rename(new org.apache.hadoop.fs.Path(live), oldP)
-          fs.rename(tmpP, new org.apache.hadoop.fs.Path(live))
-          fs.delete(oldP, true)
+          // retire-then-promote: a crash leaves the old data restorable
+          val stage = graft.operators.PartitionSwap.prepare(spark, live)
+          graft.operators.Compaction.compact(spark, live, stage, 128L * 1024 * 1024)
+          graft.operators.PartitionSwap.replace(spark, live, stage)
           true
         }
       }
@@ -779,7 +761,7 @@ object CurateCli {
     val corpusDir = s"$outDir/corpus"
     val keys = spark.read.parquet(keysPath).select(col("doc_id")).distinct()
 
-    Erasure.recoverRetired(spark, corpusDir)
+    PartitionSwap.recoverDir(spark, corpusDir)
     // content-derived sweep id: a crashed sweep RE-RUN WITH THE SAME KEY
     // SET derives the same id, so its applied per-store commits no-op
     // exactly (the runRectify recipe — a nanoTime id gave a replay no
@@ -1799,13 +1781,13 @@ object CurateCli {
       failpoint: String => Unit = _ => ()
   ): RectifySummary =
     graft.operators.Lease.withLease(spark, outDir, "rectify") {
-    import graft.operators.{Erasure, PartitionSwap, Rectify, Shards}
+    import graft.operators.{PartitionSwap, Rectify, Shards}
     import graft.text.TextAnalysis
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
     val corpusDir = s"$outDir/corpus"
-    Erasure.recoverRetired(spark, corpusDir)
+    PartitionSwap.recoverDir(spark, corpusDir)
     // an interleaved erase sweep may have purged erased subjects from a
     // pending capture and crashed mid-rename — heal before reading it
     recoverRectifyFacts(spark, outDir)

@@ -414,8 +414,8 @@ object Dedup {
     * and [[loadBandIndex]] call it themselves.
     */
   def recoverBandIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    graft.operators.Erasure.recoverRetired(spark, s"$dir/bands")
-    graft.operators.Erasure.recoverRetired(spark, s"$dir/shingles")
+    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/bands")
+    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/shingles")
     graft.operators.PartitionSwap.recover(spark, dir, "/.swap-stage", "")
   }
 

@@ -118,8 +118,8 @@ object SetSimJoin {
     * mutators and [[searchIndex]] call it themselves.
     */
   def recoverIndex(spark: SparkSession, dir: String): Unit = {
-    graft.operators.Erasure.recoverRetired(spark, s"$dir/sets")
-    graft.operators.Erasure.recoverRetired(spark, s"$dir/postings")
+    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/sets")
+    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/postings")
     graft.operators.PartitionSwap.recover(spark, dir, "/.swap-stage", "")
   }
 

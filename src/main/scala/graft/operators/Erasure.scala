@@ -29,29 +29,15 @@ import org.apache.spark.sql.functions._
   * postings, centroid-partitioned IVF rows, band-partitioned band rows)
   * survives the rewrite untouched.
   *
-  * Crash safety: every rewrite lands in `<live>__erasing`, then swaps by
-  * retire/promote rename (`<live>` → `<live>__retired`, tmp → `<live>`,
-  * delete retired) — the [[graft.cli.CurateCli]] compaction protocol, so
-  * its existing `recoverRetired` startup recovery covers erasure crashes
-  * too: a crash before the promote leaves the old store live or retired
-  * (restorable), never half-rewritten. When the staged rewrite turns out
-  * to have erased NOTHING, the stage is discarded and the live files are
-  * left byte-identical (a no-match sweep must not rewrite the store).
+  * Crash safety: every single-directory rewrite promotes through
+  * [[PartitionSwap.replace]]: a crash leaves the old store live or
+  * retired (restored by [[PartitionSwap.recoverDir]] and by the next
+  * rewrite's prepare), never half-rewritten. When the staged rewrite
+  * turns out to have erased NOTHING, the stage is discarded and the live
+  * files are left byte-identical (a no-match sweep must not rewrite the
+  * store).
   */
 object Erasure {
-
-  /** Restore a store whose rewrite crashed between retire and promote:
-    * if `live` is gone and `<live>__retired` exists, the retired
-    * directory IS the data. (Same contract as CurateCli.recoverRetired;
-    * exposed here so library users of [[eraseByKey]] outside the CLI can
-    * recover as well.)
-    */
-  def recoverRetired(spark: SparkSession, live: String): Unit = {
-    val livePath = new org.apache.hadoop.fs.Path(live)
-    val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val retired = new org.apache.hadoop.fs.Path(s"${live}__retired")
-    if (!fs.exists(livePath) && fs.exists(retired)) fs.rename(retired, livePath)
-  }
 
   /** Observed-count accessor with an exactness fallback: AQE's
     * empty-relation propagation can replace an all-filtered-out subtree
@@ -82,12 +68,13 @@ object Erasure {
     else spark.read.parquet(dir).count()
   }
 
-  /** Single-pass erase core: stage `shape(kept)` under `<live>__erasing`
-    * with observe metrics counting rows seen and rows kept on the same
-    * scan, then either discard the stage (nothing matched — live files
-    * stay byte-identical) or swap it in. `shape` lets stores append
-    * their own re-shaping (e.g. [[Shards]] re-closing `shard_pos`) and
-    * choose the write layout via `writeTo`. Returns rows erased.
+  /** Single-pass erase core: stage `shape(kept)` ([[PartitionSwap.prepare]]
+    * first heals a torn swap of `live`) with observe metrics counting rows
+    * seen and rows kept on the same scan, then either discard the stage
+    * (nothing matched — live files stay byte-identical) or swap it in.
+    * `shape` lets stores append their own re-shaping (e.g. [[Shards]]
+    * re-closing `shard_pos`) and choose the write layout via `writeTo`.
+    * Returns rows erased.
     */
   def eraseWith(
       spark: SparkSession,
@@ -98,12 +85,8 @@ object Erasure {
       writeTo: (DataFrame, String) => Unit
   ): Long = {
     val k = keys.select(col(idCol)).distinct()
-    val livePath = new org.apache.hadoop.fs.Path(live)
-    val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"${live}__erasing")
-    val old = new org.apache.hadoop.fs.Path(s"${live}__retired")
-    fs.delete(tmp, true) // stale leftovers from a crashed run
-    fs.delete(old, true)
+    val tmp = new org.apache.hadoop.fs.Path(PartitionSwap.prepare(spark, live))
+    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     val seen = Observation()
     val keptObs = Observation()
@@ -137,9 +120,7 @@ object Erasure {
           "would be unreadable; this Spark version no longer writes " +
           "schema-bearing empty files")
     }
-    fs.rename(livePath, old)
-    fs.rename(tmp, livePath)
-    fs.delete(old, true)
+    PartitionSwap.replace(spark, live, tmp.toString)
     hit
   }
 

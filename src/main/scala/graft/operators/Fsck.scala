@@ -29,26 +29,32 @@ object Fsck {
   }
 
   /** Commit-protocol hygiene for one store root: a pending marker, a
-    * `.retired` sibling, or a leftover stage dir mean a crashed commit
-    * nobody has recovered yet — serving such a store skips the rollback
-    * the protocol prescribes. (Stores recover on their own load paths;
-    * fsck reports the debt without mutating anything.)
+    * `.retired` sibling, a leftover stage dir or any swap-debris sibling
+    * ([[PartitionSwap.debrisOwner]]) mean a crashed commit nobody has
+    * recovered yet — serving such a store skips the rollback the
+    * protocol prescribes. (Stores recover on their own load paths; fsck
+    * reports the debt without mutating anything.)
     */
   def markerHygiene(spark: SparkSession, dir: String, label: String): Seq[Check] = {
-    val stripped = dir.stripSuffix("/")
+    val live = new org.apache.hadoop.fs.Path(dir.stripSuffix("/"))
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val siblings =
+      if (fs.exists(live.getParent)) fs.listStatus(live.getParent).map(_.getPath.getName).toSeq
+      else Seq.empty
+    val (retired, staged) = siblings
+      .filter(n => PartitionSwap.debrisOwner(n).contains(live.getName))
+      .partition(_ == PartitionSwap.retiredOf(live.getName))
     Seq(
       Check(label, "no_pending_marker",
         !exists(spark, s"$dir/_batches/_pending"),
         s"$dir/_batches/_pending"),
       Check(label, "no_retired_tree",
-        !exists(spark, s"$stripped.retired") &&
-          !exists(spark, s"${stripped}__retired"),
-        s"$stripped.retired"),
+        !exists(spark, s"$live.retired") && retired.isEmpty,
+        s"$live.retired" + retired.map(n => s", $n").mkString),
       Check(label, "no_stage_tree",
-        !exists(spark, s"$stripped.merge-stage") &&
-          !exists(spark, s"$dir/.swap-stage") &&
-          !exists(spark, s"${stripped}__erasing"),
-        "merge-stage/.swap-stage/__erasing"))
+        !exists(spark, s"$live.merge-stage") &&
+          !exists(spark, s"$live/.swap-stage") && staged.isEmpty,
+        ("merge-stage/.swap-stage" +: staged).mkString("/")))
   }
 
   /** BM25 search-index invariants, checkable because the docs leg makes
@@ -240,8 +246,8 @@ object Fsck {
     * whole batch tree — `batch`/`shard` come back as partition columns,
     * so the audit plan has a single scan relation however many batches
     * accumulated, never an N-leg union), and no batch directory has
-    * in-flight swap debris (`__retired` / `__rectifying` / `__erasing`
-    * siblings a crashed rewrite leaves). Because fsck must REPORT debt,
+    * in-flight swap debris ([[PartitionSwap.debrisOwner]] siblings a
+    * crashed rewrite leaves). Because fsck must REPORT debt,
     * not repay it, the debris census runs on the RAW listing before the
     * data read (which deliberately skips debris and flat husks —
     * [[Shards.liveBatchDirs]] heals nothing here when debris is absent,
@@ -252,14 +258,8 @@ object Fsck {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val children = fs.listStatus(rootPath).map(_.getPath.getName)
-    val debris = children.filter(n =>
-      n.contains("__retired") || n.contains("__rectifying") ||
-        n.contains("__erasing"))
-    val batchDirs = children.filter(n =>
-      n.startsWith("batch=") && !n.contains("__"))
-      .filter(n => fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/$n"))
-        .exists(c => c.isDirectory && c.getPath.getName.startsWith("shard=")))
-      .sorted
+    val debris = children.filter(PartitionSwap.debrisOwner(_).isDefined)
+    val batchDirs = Shards.batchDirs(fs, rootPath)
     val badPositions =
       if (batchDirs.isEmpty) 0L
       else Shards.readBatches(spark, root, batchDirs.toSeq)

@@ -1,19 +1,34 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Crash-safe commit protocol for incremental partition-tree stores —
-  * the retire/promote rename swap shared by [[EventStatsStore]] (day
-  * partitions), [[AggStore]] (bucket partitions), and the multi-leg
-  * index stores ([[graft.text.Bm25]] postings+docs+stats,
-  * [[graft.dedup.SetSimJoin]] sets+postings deltas).
+/** The store commit primitives — every store directory a verb replaces
+  * is promoted here, by one of two retire/promote rename protocols:
+  *   - '''single-directory replace''' ([[prepare]], [[replace]],
+  *     [[recoverDir]]): one whole directory rewritten from a staged copy
+  *     — the erase and rectify rewrites, the corpus and IVF compactions,
+  *     the profile-sketch merges, the snapshot `_stats` refresh;
+  *   - '''multi-entry commit''' ([[commit]], [[recover]]): several
+  *     entries of one store landing together, replayed exactly once —
+  *     the partition-tree stores ([[EventStatsStore]] days, [[AggStore]]
+  *     buckets) and the multi-leg index stores ([[graft.text.Bm25]],
+  *     [[graft.dedup.SetSimJoin]], the band index).
+  * Three promotes stay outside on purpose: `DeletionVectors.compactUnder`
+  * promotes to a content-addressed name and retires the sources last (a
+  * crash may only over-mask; no live directory is replaced);
+  * `Snapshot.commitStagedBuckets` promotes buckets under the dirty marker
+  * (non-atomic across buckets by contract; the merge/erase replay and the
+  * manifest heal converge it); `CurateCli.purgePendingRectifyFacts` /
+  * `recoverRectifyFacts` roll FORWARD (rolling back would hand a rectify
+  * replay a capture that still holds the subjects an erase removed).
   *
-  * Dynamic partition overwrite is NOT crash-safe for multi-directory
-  * commits: Spark replaces the touched partition directories
-  * non-atomically at job commit, and a crash mid-commit leaves some
-  * partitions merged and some not while the replayed batch re-adds
-  * itself to the already-rewritten ones. This protocol makes the commit
-  * all-or-nothing from the replayer's point of view:
+  * Multi-entry commit: dynamic partition overwrite is NOT crash-safe for
+  * multi-directory commits — Spark replaces the touched partition
+  * directories non-atomically at job commit, and a crash mid-commit
+  * leaves some partitions merged and some not while the replayed batch
+  * re-adds itself to the already-rewritten ones. This protocol makes the
+  * commit all-or-nothing from the replayer's point of view:
   *
   *   1. a pending marker (carrying the batch id AND the touched-entry
   *      list) lands first;
@@ -61,6 +76,77 @@ object PartitionSwap {
   private def appliedMarker(dir: String, batchId: Long) = s"$dir/_batches/$batchId"
   private def retiredDir(dir: String) = dir.stripSuffix("/") + ".retired"
 
+  private val Retired = "__retired"
+  private val Staging = "__staging"
+  // every sibling a replace may leave; the last four are the per-verb
+  // stage names used before [[prepare]], so their debris reports and clears
+  private val Siblings =
+    Seq(Retired, Staging, "__erasing", "__rectifying", "__compacting", "__next")
+
+  private def fsOf(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Where [[replace]] parks the old copy of `live` until the promote landed. */
+  private[operators] def retiredOf(live: String): String = live.stripSuffix("/") + Retired
+
+  /** The live directory name that `name` is [[replace]] debris of
+    * (`corpus` for `corpus__retired` or `corpus__staging`), else None.
+    */
+  def debrisOwner(name: String): Option[String] = Siblings.collectFirst {
+    case s if name.endsWith(s) && name.length > s.length => name.dropRight(s.length)
+  }
+
+  /** Heal a [[replace]] torn between retire and promote (`live` absent,
+    * `<live>__retired` holding the data) — run on every read path of a
+    * store that promotes through [[replace]]; two `exists` when healthy.
+    */
+  def recoverDir(spark: SparkSession, live: String): Unit = {
+    val fs = fsOf(spark, live)
+    val retired = new Path(retiredOf(live))
+    if (!fs.exists(new Path(live)) && fs.exists(retired))
+      require(fs.rename(retired, new Path(live)), s"swap: restoring $retired to $live failed")
+  }
+
+  /** Start a single-directory replace of `live`: heal a torn swap
+    * ([[recoverDir]]) and only THEN clear the stage and retired siblings
+    * a crashed run left — so a torn store's only copy is restored, never
+    * deleted. Returns the stage path to write the new content to.
+    */
+  def prepare(spark: SparkSession, live: String): String = {
+    recoverDir(spark, live)
+    val base = live.stripSuffix("/")
+    Siblings.foreach(s => fsOf(spark, live).delete(new Path(base + s), true))
+    base + Staging
+  }
+
+  /** Promote the [[prepare]]d `stage` over `live`: retire `live` to
+    * `<live>__retired`, promote, drop the retired copy. A failed rename
+    * throws; after a failed promote the retired copy stays for
+    * [[recoverDir]] to put back.
+    */
+  def replace(spark: SparkSession, live: String, stage: String): Unit =
+    replace(spark, live, stage, _ => ())
+
+  /** [[replace]] with [[commit]]'s fault-injection hook: `beforeStep`
+    * runs before each of the three filesystem mutations. A parameter, not
+    * shared state, because `Par` legs replace in parallel.
+    */
+  private[graft] def replace(
+      spark: SparkSession,
+      live: String,
+      stage: String,
+      beforeStep: Int => Unit
+  ): Unit = {
+    var step = 0
+    def stepped[A](body: => A): A = { beforeStep(step); step += 1; body }
+    val fs = fsOf(spark, live)
+    val retired = new Path(retiredOf(live))
+    stepped(require(fs.rename(new Path(live), retired), s"swap: retiring $live failed"))
+    stepped(require(fs.rename(new Path(stage), new Path(live)),
+      s"swap: promoting $stage over $live failed; the old copy stays at $retired"))
+    stepped(fs.delete(retired, true))
+  }
+
   /** Namespace a content-derived batch id per commit LEG: a multi-store
     * sweep (CurateCli rectify/erase) derives ONE id from its request
     * content and commits several stores under it — but two sweeps'
@@ -79,18 +165,14 @@ object PartitionSwap {
   /** True when `batchId` already committed (check before re-deriving a
     * batch on replay).
     */
-  def alreadyApplied(spark: SparkSession, dir: String, batchId: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(appliedMarker(dir, batchId))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def alreadyApplied(spark: SparkSession, dir: String, batchId: Long): Boolean =
+    fsOf(spark, dir).exists(new Path(appliedMarker(dir, batchId)))
 
   /** Mark a batch applied WITHOUT a swap (bootstrap writes, no-op
     * batches).
     */
-  def markApplied(spark: SparkSession, dir: String, batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(appliedMarker(dir, batchId))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true).close()
-  }
+  def markApplied(spark: SparkSession, dir: String, batchId: Long): Unit =
+    fsOf(spark, dir).create(new Path(appliedMarker(dir, batchId)), true).close()
 
   /** Reserved batch id for [[commitEphemeral]] — one fixed id per store
     * namespace, so the ephemeral path never collides with a
@@ -126,8 +208,8 @@ object PartitionSwap {
       entries: Seq[String],
       beforeStep: Int => Unit
   ): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(appliedMarker(dir, EphemeralId))
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new Path(appliedMarker(dir, EphemeralId))
+    val fs = fsOf(spark, dir)
     // a stray marker here is a PREVIOUS ephemeral commit's crashed
     // cleanup (the caller's recovery already settled any pending
     // commit); it must go BEFORE this commit writes its pending marker,
@@ -168,9 +250,8 @@ object PartitionSwap {
   ): Unit = {
     var step = 0
     def stepped[A](body: => A): A = { beforeStep(step); step += 1; body }
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val retired = new org.apache.hadoop.fs.Path(retiredDir(dir))
+    val fs = fsOf(spark, dir)
+    val retired = new Path(retiredDir(dir))
     stepped(fs.delete(retired, true))
     stepped(fs.mkdirs(retired))
     stepped {
@@ -182,10 +263,9 @@ object PartitionSwap {
       // without the tag the two states are indistinguishable (the
       // exhaustive crash property caught exactly this as data loss)
       val tagged = entries.map { p =>
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$stage/$p"))) p else s"-$p"
+        if (fs.exists(new Path(s"$stage/$p"))) p else s"-$p"
       }
-      val pend = fs.create(
-        new org.apache.hadoop.fs.Path(pendingMarker(dir) + ".tmp"), true)
+      val pend = fs.create(new Path(pendingMarker(dir) + ".tmp"), true)
       pend.write((batchId.toString +: tagged).mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       pend.close()
@@ -194,33 +274,31 @@ object PartitionSwap {
     // absent: a crash mid-write of the multi-line entry list would
     // otherwise leave a truncated marker that bricks every subsequent
     // recover (lines.head.toLong throws forever until manual cleanup)
-    stepped(fs.rename(
-      new org.apache.hadoop.fs.Path(pendingMarker(dir) + ".tmp"),
-      new org.apache.hadoop.fs.Path(pendingMarker(dir))))
+    stepped(fs.rename(new Path(pendingMarker(dir) + ".tmp"), new Path(pendingMarker(dir))))
     entries.foreach { p =>
-      val live = new org.apache.hadoop.fs.Path(s"$dir/$p")
+      val live = new Path(s"$dir/$p")
       if (fs.exists(live)) stepped {
-        val dst = new org.apache.hadoop.fs.Path(retired, p)
+        val dst = new Path(retired, p)
         fs.mkdirs(dst.getParent)
         fs.rename(live, dst)
       }
     }
     entries.foreach { p =>
-      val src = new org.apache.hadoop.fs.Path(s"$stage/$p")
+      val src = new Path(s"$stage/$p")
       // a listed entry with NO staged counterpart is a DELETION: the
       // retire above already moved the live entry aside (an erasure that
       // empties a whole partition stages nothing for it), and rollback
       // restores it from retired like any other entry
       if (fs.exists(src)) stepped {
-        val dst = new org.apache.hadoop.fs.Path(s"$dir/$p")
+        val dst = new Path(s"$dir/$p")
         fs.mkdirs(dst.getParent)
         fs.rename(src, dst)
       }
     }
     stepped(markApplied(spark, dir, batchId))
     stepped(fs.delete(retired, true))
-    stepped(fs.delete(new org.apache.hadoop.fs.Path(stage), true))
-    stepped(fs.delete(new org.apache.hadoop.fs.Path(pendingMarker(dir)), false))
+    stepped(fs.delete(new Path(stage), true))
+    stepped(fs.delete(new Path(pendingMarker(dir)), false))
   }
 
   /** Crash recovery — see class doc. `stageSuffix` appends to `dir` to
@@ -235,13 +313,13 @@ object PartitionSwap {
       stageSuffix: String,
       partitionPrefix: String
   ): Unit = {
-    val pending = new org.apache.hadoop.fs.Path(pendingMarker(dir))
-    val fs = pending.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pending = new Path(pendingMarker(dir))
+    val fs = fsOf(spark, dir)
     // a stale `.tmp` means the marker write itself crashed: no retire or
     // promote has run (they follow the marker rename), so the live tree
     // is untouched — just drop the partial and, if no complete marker
     // landed, there is nothing to roll back
-    fs.delete(new org.apache.hadoop.fs.Path(pendingMarker(dir) + ".tmp"), false)
+    fs.delete(new Path(pendingMarker(dir) + ".tmp"), false)
     if (!fs.exists(pending)) return
     val lines = {
       val in = fs.open(pending)
@@ -256,9 +334,9 @@ object PartitionSwap {
     }
     val batchId = lines.head.toLong
     val entries = lines.tail
-    val retired = new org.apache.hadoop.fs.Path(retiredDir(dir))
-    val stagePath = new org.apache.hadoop.fs.Path(dir.stripSuffix("/") + stageSuffix)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(appliedMarker(dir, batchId)))) {
+    val retired = new Path(retiredDir(dir))
+    val stagePath = new Path(dir.stripSuffix("/") + stageSuffix)
+    if (!fs.exists(new Path(appliedMarker(dir, batchId)))) {
       // roll back, per listed entry (class doc): restore from retired,
       // leave not-yet-promoted originals alone, delete promoted entries
       // that had no live predecessor. "-"-tagged DELETION entries are
@@ -267,9 +345,9 @@ object PartitionSwap {
       entries.foreach { raw =>
         val deletion = raw.startsWith("-")
         val p = if (deletion) raw.drop(1) else raw
-        val live = new org.apache.hadoop.fs.Path(s"$dir/$p")
-        val ret = new org.apache.hadoop.fs.Path(retired, p)
-        val staged = new org.apache.hadoop.fs.Path(stagePath, p)
+        val live = new Path(s"$dir/$p")
+        val ret = new Path(retired, p)
+        val staged = new Path(stagePath, p)
         if (fs.exists(ret)) {
           fs.delete(live, true)
           fs.mkdirs(live.getParent)
@@ -284,7 +362,7 @@ object PartitionSwap {
         fs.listStatus(retired).foreach { st =>
           if (st.getPath.getName.startsWith(partitionPrefix) &&
             partitionPrefix.nonEmpty) {
-            val live = new org.apache.hadoop.fs.Path(dir, st.getPath.getName)
+            val live = new Path(dir, st.getPath.getName)
             fs.delete(live, true)
             fs.rename(st.getPath, live)
           }
@@ -299,13 +377,8 @@ object PartitionSwap {
   /** Child names under `stage` matching `prefix` — the staged partition
     * list a bootstrap-through-stage commit promotes.
     */
-  def listEntries(spark: SparkSession, stage: String, prefix: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(stage)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith(prefix)).sorted.toSeq
-  }
+  def listEntries(spark: SparkSession, stage: String, prefix: String): Seq[String] =
+    childNames(spark, stage).filter(_.startsWith(prefix))
 
   /** Parquet file names directly under a staged leg — the delta-file
     * entry list an APPEND commit promotes into a live leg directory
@@ -313,11 +386,11 @@ object PartitionSwap {
     * live files; `_SUCCESS` and other markers stay behind and are
     * removed with the stage).
     */
-  def stagedParquetFiles(spark: SparkSession, stagedLeg: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(stagedLeg)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).sorted.toSeq
+  def stagedParquetFiles(spark: SparkSession, stagedLeg: String): Seq[String] =
+    childNames(spark, stagedLeg).filter(_.endsWith(".parquet"))
+
+  private def childNames(spark: SparkSession, dir: String): Seq[String] = {
+    val (p, fs) = (new Path(dir), fsOf(spark, dir))
+    if (!fs.exists(p)) Seq.empty else fs.listStatus(p).map(_.getPath.getName).sorted.toSeq
   }
 }

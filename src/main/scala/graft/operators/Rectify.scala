@@ -42,8 +42,9 @@ object Rectify {
     * live files. The rewrite is a broadcast left join + projection —
     * narrow, no shuffle, so whatever file clustering the store relies on
     * survives unless `shape` re-declares it. Crash-safe via the
-    * retire/promote swap ([[Erasure.recoverRetired]] on the load path).
-    * Returns rows updated.
+    * single-directory swap ([[PartitionSwap.prepare]] heals a torn one
+    * before the read, [[PartitionSwap.replace]] promotes). Returns rows
+    * updated.
     *
     * `corrected` must be unique per id (a request-sized frame — the
     * uniqueness probe is two bounded counts): duplicate corrected rows
@@ -61,7 +62,8 @@ object Rectify {
     // a crashed run's mid-swap state (live retired, promote not landed)
     // heals here, so DIRECT callers are covered too — the store-level
     // rectifies run their own recovery first, and this replay is a no-op
-    Erasure.recoverRetired(spark, live)
+    val tmp = new org.apache.hadoop.fs.Path(PartitionSwap.prepare(spark, live))
+    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val replaceCols = corrected.columns.filterNot(_ == idCol).toSeq
     require(replaceCols.nonEmpty,
       s"rectify: corrected frame carries only '$idCol' — nothing to replace")
@@ -81,13 +83,6 @@ object Rectify {
     val c = corrected.select(
       col(idCol) +: replaceCols.map(n => col(n).as(s"_r_$n")) :+
         lit(1).as("_r_hit"): _*)
-
-    val livePath = new org.apache.hadoop.fs.Path(live)
-    val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"${live}__rectifying")
-    val old = new org.apache.hadoop.fs.Path(s"${live}__retired")
-    fs.delete(tmp, true) // stale leftovers from a crashed run
-    fs.delete(old, true)
 
     val hitObs = Observation()
     val updated = liveDf
@@ -110,9 +105,7 @@ object Rectify {
       fs.delete(tmp, true)
       return 0L
     }
-    fs.rename(livePath, old)
-    fs.rename(tmp, livePath)
-    fs.delete(old, true)
+    PartitionSwap.replace(spark, live, tmp.toString)
     hit
   }
 }

@@ -35,8 +35,8 @@ object Shards {
     *     rewrite leaves `batch=N` absent with `batch=N__retired`
     *     holding the data) so a partitioned read never spans a
     *     half-swapped tree;
-    *   - excludes in-flight swap debris (`__retired`/`__erasing`/
-    *     `__rectifying` siblings with their live twin present);
+    *   - excludes in-flight swap debris ([[PartitionSwap.debrisOwner]]
+    *     siblings with their live twin present);
     *   - excludes the FLAT schema-only directories a TOTAL erasure
     *     leaves behind (zero rows, no `shard=` children — mixing one
     *     into a multi-directory partitioned read trips Spark's
@@ -48,18 +48,22 @@ object Shards {
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(rootPath)) return Seq.empty
     fs.listStatus(rootPath).map(_.getPath.getName)
-      .filter(n => n.startsWith("batch=") && n.endsWith("__retired"))
-      .foreach(n =>
-        Erasure.recoverRetired(spark, s"$root/${n.stripSuffix("__retired")}"))
-    fs.listStatus(rootPath)
+      .flatMap(PartitionSwap.debrisOwner).distinct
+      .foreach(live => PartitionSwap.recoverDir(spark, s"$root/$live"))
+    batchDirs(fs, rootPath)
+  }
+
+  /** [[liveBatchDirs]] without the heal — the read-only listing fsck audits. */
+  private[operators] def batchDirs(
+      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path): Seq[String] =
+    fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch=") &&
-        !s.getPath.getName.contains("__"))
+        PartitionSwap.debrisOwner(s.getPath.getName).isEmpty)
       .filter(s => fs.listStatus(s.getPath).exists(c =>
         c.isDirectory && c.getPath.getName.startsWith("shard=")))
       .map(_.getPath.getName)
       .sortBy(_.stripPrefix("batch=").toInt)
       .toSeq
-  }
 
   /** ONE partitioned read spanning the given batch directories: `batch`
     * and `shard` come back as partition columns, so a membership probe
@@ -187,7 +191,6 @@ object Shards {
       idCol: String,
       orderCols: Seq[String] = Nil
   ): Long = {
-    Erasure.recoverRetired(spark, dir)
     // single pass over the shard directory: the audit count rides the
     // rewrite scan as observe metrics (Erasure.eraseWith), the position
     // re-close is the store-specific `shape`
@@ -239,7 +242,6 @@ object Shards {
       s"shards rectify: corrected frame must not carry order/layout " +
         s"column(s) ${touched.mkString(", ")} — changing an order key is a " +
         "retire+re-admit, not an in-place rectification")
-    Erasure.recoverRetired(spark, dir)
     val hit = Rectify.updateByKey(spark, dir, corrected, idCol,
       shape = _
         .repartition(col("shard"))

@@ -497,8 +497,8 @@ object Snapshot {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirty = new org.apache.hadoop.fs.Path(dirtyMarker(dir))
     if (fs.exists(dirty) || !fs.exists(new org.apache.hadoop.fs.Path(manifestDir))) {
+      graft.operators.PartitionSwap.prepare(spark, manifestDir) // heal, clear debris
       fs.delete(new org.apache.hadoop.fs.Path(manifestDir), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$manifestDir.stage"), true)
       DataSkipping.writeManifest(spark, dir, Seq(uniqueKey), manifestDir)
       fs.delete(dirty, false)
     }
@@ -511,7 +511,7 @@ object Snapshot {
     * buckets). Untouched buckets keep their rows — no re-scan. A store
     * written before manifests existed bootstraps one here. The manifest
     * must stay COMPLETE (a pruned read trusts it to list every file), so
-    * the refresh is all-or-nothing via the same stage-swap as the data.
+    * the refresh is all-or-nothing via [[graft.operators.PartitionSwap.replace]].
     */
   private def refreshManifest(
       spark: org.apache.spark.sql.SparkSession,
@@ -519,7 +519,7 @@ object Snapshot {
       uniqueKey: String,
       touched: Seq[Int]
   ): Unit = {
-    import graft.operators.DataSkipping
+    import graft.operators.{DataSkipping, PartitionSwap}
     val manifestDir = s"$dir/${DataSkipping.ManifestSubdir}"
     val fs = new org.apache.hadoop.fs.Path(manifestDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -532,7 +532,7 @@ object Snapshot {
       val touchedStats = DataSkipping.statsOf(
         spark.read.parquet(dir).filter(col("bucket").isin(touched: _*)),
         Seq(uniqueKey))
-      val stage = s"$dir/${DataSkipping.ManifestSubdir}.stage"
+      val stage = PartitionSwap.prepare(spark, manifestDir)
       untouchedRows.unionByName(touchedStats)
         .coalesce(1)
         .write.mode("overwrite").parquet(stage)
@@ -541,12 +541,7 @@ object Snapshot {
       // directory (prunedRead trusts the manifest to list EVERY file).
       // Any crash inside this window leaves the dirty marker set, and
       // healManifest rebuilds from data.
-      val retired = new org.apache.hadoop.fs.Path(s"$manifestDir.retired")
-      fs.delete(retired, true)
-      fs.rename(new org.apache.hadoop.fs.Path(manifestDir), retired)
-      fs.rename(new org.apache.hadoop.fs.Path(stage),
-        new org.apache.hadoop.fs.Path(manifestDir))
-      fs.delete(retired, true)
+      PartitionSwap.replace(spark, manifestDir, stage)
     }
   }
 

@@ -195,7 +195,7 @@ object Ivf {
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): (DataFrame, DataFrame) = {
-    graft.operators.Erasure.recoverRetired(spark, s"$dir/assigned")
+    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/assigned")
     (
       spark.read.parquet(s"$dir/centroids").select(col("centroid_id"), col("centroid")),
       spark.read.parquet(s"$dir/assigned"))
@@ -230,7 +230,7 @@ object Ivf {
     // self-heal a torn retire/promote swap before appending — an append
     // landing while `assigned/` is absent would silently found a NEW
     // store next to the retired one (loadIndex scaladoc)
-    graft.operators.Erasure.recoverRetired(spark, s"$dir/assigned")
+    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/assigned")
     val centroids = spark.read.parquet(s"$dir/centroids")
       .select(col("centroid_id"), col("centroid"))
     assign(batch, idCol, vecCol, centroids)
@@ -246,29 +246,21 @@ object Ivf {
     * cluster partition ([[graft.operators.Compaction.compactPartitioned]])
     * — content-identical for any layout (raw vectors or PQ codes ride
     * through untouched), value-idempotent, crash-safe via the
-    * whole-directory retire/promote swap ([[graft.operators.Erasure]]
-    * convention; `recoverRetired` heals a torn promote). Returns
-    * (assigned files before, after).
+    * single-directory swap ([[graft.operators.PartitionSwap.prepare]]
+    * heals a torn promote first, [[graft.operators.PartitionSwap.replace]]
+    * promotes). Returns (assigned files before, after).
     */
   def compactIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       targetBytes: Long = 128L << 20
   ): (Int, Int) = {
-    import graft.operators.{Compaction, Erasure}
+    import graft.operators.{Compaction, PartitionSwap}
     val assigned = s"$dir/assigned"
-    Erasure.recoverRetired(spark, assigned)
-    val livePath = new org.apache.hadoop.fs.Path(assigned)
-    val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"${assigned}__compacting")
-    val old = new org.apache.hadoop.fs.Path(s"${assigned}__retired")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
+    val stage = PartitionSwap.prepare(spark, assigned)
     val counts = Compaction.compactPartitioned(
-      spark, assigned, tmp.toString, targetBytes, Seq("centroid_id"))
-    fs.rename(livePath, old)
-    fs.rename(tmp, livePath)
-    fs.delete(old, true)
+      spark, assigned, stage, targetBytes, Seq("centroid_id"))
+    PartitionSwap.replace(spark, assigned, stage)
     counts
   }
 
@@ -296,8 +288,8 @@ object Ivf {
       idCol: String,
       vecCol: String
   ): Long = {
-    import graft.operators.{Erasure, Rectify}
-    Erasure.recoverRetired(spark, s"$dir/assigned")
+    import graft.operators.{PartitionSwap, Rectify}
+    PartitionSwap.recoverDir(spark, s"$dir/assigned")
     val stored = spark.read.parquet(s"$dir/assigned").columns.toSet
     val extra = stored -- Set(idCol, vecCol, "centroid_id")
     require(extra.isEmpty,
@@ -330,9 +322,8 @@ object Ivf {
       keys: DataFrame,
       idCol: String
   ): Long = {
-    import graft.operators.Erasure
-    Erasure.recoverRetired(spark, s"$dir/assigned")
-    Erasure.eraseByKey(spark, s"$dir/assigned", keys, idCol, Seq("centroid_id"))
+    graft.operators.Erasure.eraseByKey(
+      spark, s"$dir/assigned", keys, idCol, Seq("centroid_id"))
   }
 
   /** Cluster-distribution drift: PSI between the stored index's

@@ -412,8 +412,8 @@ object Pq {
       cb: Codebook,
       codesCol: String = "codes"
   ): Long = {
-    import graft.operators.{Erasure, Rectify}
-    Erasure.recoverRetired(spark, s"$dir/assigned")
+    import graft.operators.{PartitionSwap, Rectify}
+    PartitionSwap.recoverDir(spark, s"$dir/assigned")
     val stored = spark.read.parquet(s"$dir/assigned").columns.toSet
     require(stored == Set(idCol, codesCol, "centroid_id"),
       s"pq rectify: assigned/ columns (${stored.mkString(", ")}) are not " +

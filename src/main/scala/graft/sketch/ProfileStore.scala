@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   * (distinct-document estimates, token-length quantiles) costs one tiny
   * read no matter how many petabytes landed.
   *
-  * Durability follows the curation stores' retire/promote contract
-  * (CurateCli scaladoc): merged sketches land in a `__next` staging dir,
-  * the live dir retires, the staging dir promotes, and [[recover]]
-  * restores a retired dir whose promote never happened. Sketch files are
-  * a few KB, so the rewrite-per-append is free.
+  * Durability: each sketch leg (`hll`, `hdr`, `kmv`) promotes through
+  * [[graft.operators.PartitionSwap]]'s single-directory replace; run its
+  * `recoverDir` on each leg before [[exists]] routes a batch
+  * (CurateCli.runIncremental does). Sketch files are a few KB, so the
+  * rewrite-per-append is free.
   */
 object ProfileStore {
 
@@ -35,17 +35,6 @@ object ProfileStore {
 
   def exists(spark: SparkSession, dir: String): Boolean =
     fsOf(spark, dir).exists(p(s"$dir/hll"))
-
-  /** Crash recovery: if a previous append retired the live dir but never
-    * promoted its staging dir, the retired dir IS the data.
-    */
-  def recover(spark: SparkSession, dir: String): Unit = {
-    val fs = fsOf(spark, dir)
-    Seq(s"$dir/hll", s"$dir/hdr", s"$dir/kmv").foreach { live =>
-      if (!fs.exists(p(live)) && fs.exists(p(s"${live}__retired")))
-        fs.rename(p(s"${live}__retired"), p(live))
-    }
-  }
 
   private def sketchBatch(
       batch: DataFrame,
@@ -82,7 +71,7 @@ object ProfileStore {
   /** Merges one batch into the stored profile. The merged sketch is fully
     * materialized into the staging dir BEFORE the live dir moves, so a
     * crash at any point leaves either the old profile live or recoverable
-    * ([[recover]]); the merge plan is never asked to read a path that is
+    * (`recoverDir`); the merge plan is never asked to read a path that is
     * being replaced under it.
     */
   def append(
@@ -95,20 +84,14 @@ object ProfileStore {
   ): Unit = {
     val fs = fsOf(spark, dir)
     val (hllB, hdrB) = sketchBatch(batch, distinctCol, lenCol)
-    def swapIn(live: String, merged: DataFrame): Unit = {
-      val next = s"${live}__next"
-      val old = s"${live}__retired"
-      fs.delete(p(next), true)
-      fs.delete(p(old), true)
-      merged.coalesce(1).write.mode("overwrite").parquet(next)
-      fs.rename(p(live), p(old))
-      fs.rename(p(next), p(live))
-      fs.delete(p(old), true)
+    import graft.operators.PartitionSwap
+    def swapIn(live: String, merge: DataFrame => DataFrame): Unit = {
+      val next = PartitionSwap.prepare(spark, live)
+      merge(spark.read.parquet(live)).coalesce(1).write.mode("overwrite").parquet(next)
+      PartitionSwap.replace(spark, live, next)
     }
-    swapIn(s"$dir/hll",
-      Hll.merge(spark.read.parquet(s"$dir/hll").unionAll(hllB)))
-    swapIn(s"$dir/hdr",
-      HdrHistogram.merge(spark.read.parquet(s"$dir/hdr").unionAll(hdrB)))
+    swapIn(s"$dir/hll", stored => Hll.merge(stored.unionAll(hllB)))
+    swapIn(s"$dir/hdr", stored => HdrHistogram.merge(stored.unionAll(hdrB)))
     sourceCol.foreach { src =>
       val kmvB = Kmv.sketch(batch, distinctCol, Seq(src), KmvK)
       if (!fs.exists(p(s"$dir/kmv")))
@@ -116,9 +99,7 @@ object ProfileStore {
         // forward (the HLL/HDR halves are unaffected)
         kmvB.coalesce(1).write.mode("overwrite").parquet(s"$dir/kmv")
       else
-        swapIn(s"$dir/kmv",
-          Kmv.merge(
-            spark.read.parquet(s"$dir/kmv").unionAll(kmvB), Seq(src), KmvK))
+        swapIn(s"$dir/kmv", stored => Kmv.merge(stored.unionAll(kmvB), Seq(src), KmvK))
     }
   }
 

@@ -347,7 +347,7 @@ object Bm25 {
     * and the mutators call it themselves.
     */
   def recoverSearchIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    graft.operators.Erasure.recoverRetired(spark, s"$dir/postings")
+    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/postings")
     graft.operators.PartitionSwap.recover(spark, dir, "/.swap-stage", "")
   }
 

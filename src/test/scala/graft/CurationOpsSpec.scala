@@ -1132,7 +1132,7 @@ class CurationOpsSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.rename(new org.apache.hadoop.fs.Path(s"$state/profile/hll"),
       new org.apache.hadoop.fs.Path(s"$state/profile/hll__retired"))
-    ProfileStore.recover(spark, s"$state/profile")
+    graft.operators.PartitionSwap.recoverDir(spark, s"$state/profile/hll")
     assert(ProfileStore.exists(spark, s"$state/profile"))
     assert(spark.read.parquet(s"$state/profile/hll").count() == storedHll.count())
   }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Erasure
+import graft.operators.{Erasure, PartitionSwap}
 
 /** Store-level erasure mechanics: the broadcast anti-join purge, the
   * no-match no-op, the retire/promote crash protocol, and the BM25
@@ -88,7 +88,7 @@ class ErasureSpec extends SparkSpec {
       "erase(A ∪ B) must equal erase(A) then erase(B)")
   }
 
-  test("recoverRetired restores a store whose promote never landed") {
+  test("recoverDir restores a store whose promote never landed") {
     val dir = tmp("recover")
     Seq((1L, "a")).toDF("id", "v").write.parquet(dir)
     // simulate a crash after retire, before promote
@@ -96,9 +96,37 @@ class ErasureSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.rename(new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(s"${dir}__retired"))
-    Erasure.recoverRetired(spark, dir)
+    PartitionSwap.recoverDir(spark, dir)
     assert(spark.read.parquet(dir).count() == 1L)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${dir}__retired")))
+  }
+
+  test("a direct erase or rectify over a TORN store heals it first, never deletes its only copy") {
+    // torn swap: live retired, promote never landed — the retired copy is
+    // the store's only data, so the verb must restore it before clearing
+    // stale siblings and then run over the restored rows
+    val verbs = Seq[(String, String => Long)](
+      "eraseByKey" -> (dir => Erasure.eraseByKey(spark, dir, Seq(3L, 7L).toDF("id"), "id")),
+      "updateByKey" -> (dir => graft.operators.Rectify.updateByKey(
+        spark, dir, Seq((3L, "X"), (7L, "Y")).toDF("id", "v"), "id")))
+    verbs.foreach { case (name, verb) =>
+      val dir = tmp(s"torn_$name")
+      (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v").write.parquet(dir)
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.rename(new org.apache.hadoop.fs.Path(dir),
+        new org.apache.hadoop.fs.Path(s"${dir}__retired"))
+      assert(verb(dir) == 2L, s"$name must run over the restored rows")
+      val back = spark.read.parquet(dir)
+      if (name == "eraseByKey") {
+        assert(back.count() == 8L)
+        assert(back.filter(col("id").isin(3L, 7L)).isEmpty)
+      } else {
+        assert(back.count() == 10L)
+        assert(back.filter(col("id") === 7L).head().getAs[String]("v") == "Y")
+      }
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${dir}__retired")))
+    }
   }
 
   test("bm25 erase: stats decrement exactly matches a rebuild from the retained corpus") {

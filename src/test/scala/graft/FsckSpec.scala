@@ -126,6 +126,37 @@ class FsckSpec extends SparkSpec {
       "a pending erase-facts capture must flag with its batch id")
   }
 
+  test("stage debris of a single-directory swap flags no_stage_tree, whatever verb left it") {
+    // a crashed compaction / rectification strands `<live>__compacting` /
+    // `<live>__rectifying` beside the live store; the marker census must
+    // report every such sibling, not only an erasure's
+    val state = Files.createTempDirectory("fsck_debris").toString
+    val dense = Files.createTempDirectory("fsck_debris_dense").toString
+    val fs = new org.apache.hadoop.fs.Path(state)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (1L to 20L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+      .write.parquet(s"$state/corpus")
+    val e = (1L to 40L).map(i => (i, Array(i.toFloat, (i % 5).toFloat)))
+      .toDF("vec_id", "embedding")
+    val (cents, assigned) =
+      graft.similarity.Ivf.build(e, "vec_id", "embedding", k = 2, iters = 1)
+    graft.similarity.Ivf.writeIndex(
+      cents, assigned, "vec_id", "embedding", s"$dense/index")
+    def stageCheck(checks: Seq[Fsck.Check], component: String): Fsck.Check =
+      checks.find(c => c.component == component && c.check == "no_stage_tree").get
+    assert(stageCheck(Fsck.state(spark, state), "corpus").ok)
+    assert(stageCheck(Fsck.denseIndex(spark, s"$dense/index"), "dense").ok)
+
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$state/corpus__compacting"))
+    val corpus = stageCheck(Fsck.state(spark, state), "corpus")
+    assert(!corpus.ok && corpus.detail.contains("corpus__compacting"),
+      s"a stranded corpus__compacting must flag: $corpus")
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dense/index/assigned__rectifying"))
+    val ivf = stageCheck(Fsck.denseIndex(spark, s"$dense/index"), "dense")
+    assert(!ivf.ok && ivf.detail.contains("assigned__rectifying"),
+      s"a stranded assigned__rectifying must flag: $ivf")
+  }
+
   test("pending retention keys flag as sweep debt; a torn capture stays clean") {
     val state = Files.createTempDirectory("fsck_ret").toString
     val fs = new org.apache.hadoop.fs.Path(state)

@@ -230,4 +230,77 @@ class PartitionSwapSpec extends SparkSpec {
     PartitionSwap.recover(spark, dir, ".merge-stage", "p=")
     assert(read(s"$dir/p=1/data") == Some("old1"))
   }
+
+  test("property: the single-directory replace killed at EVERY step recovers to old or new, then converges") {
+    // the same exhaustive kill as the commit property, for prepare/replace:
+    // after recoverDir the live directory holds EXACTLY the old or EXACTLY
+    // the new content, and a fresh prepare+replace lands the new content
+    // with no sibling debris left
+    final case class Crash(step: Int) extends RuntimeException
+    def build(tag: String): (String, String) = {
+      val dir = tmp(tag)
+      put(s"$dir/data", "old")
+      val stage = PartitionSwap.prepare(spark, dir)
+      put(s"$stage/data", "new")
+      (dir, stage)
+    }
+    def siblings(dir: String): Seq[String] =
+      new java.io.File(dir).getParentFile.listFiles().map(_.getName).sorted.toSeq
+
+    var nSteps = 0
+    val (cd, cs) = build("replace_count")
+    PartitionSwap.replace(spark, cd, cs, i => nSteps = i + 1)
+    assert(read(s"$cd/data") == Some("new") && siblings(cd) == Seq("store"))
+    assert(nSteps == 3, s"retire, promote and cleanup are the steps, got $nSteps")
+
+    (0 until nSteps).foreach { k =>
+      val (dir, stage) = build(s"replace_$k")
+      intercept[Crash] {
+        PartitionSwap.replace(spark, dir, stage, i => if (i == k) throw Crash(i))
+      }
+      PartitionSwap.recoverDir(spark, dir)
+      // before the promote the old content survives; after it, the new
+      val expected = if (k < 2) "old" else "new"
+      assert(read(s"$dir/data") == Some(expected),
+        s"crash at step $k: live must hold exactly the $expected content")
+      val again = PartitionSwap.prepare(spark, dir)
+      put(s"$again/data", "new")
+      PartitionSwap.replace(spark, dir, again)
+      assert(read(s"$dir/data") == Some("new"))
+      assert(siblings(dir) == Seq("store"),
+        s"crash at step $k: the re-run must leave no debris, got ${siblings(dir)}")
+    }
+  }
+
+  test("a promote that did not land keeps the retired copy, and recoverDir restores it") {
+    // the `failpromote` scheme is the local file system with a rename that
+    // returns false for a promote (source named `<live>__staging`)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failpromote.impl", classOf[FailPromoteFileSystem].getName)
+    val local = tmp("failpromote")
+    val live = s"failpromote://$local"
+    put(s"$local/data", "old")
+    val stage = PartitionSwap.prepare(spark, live)
+    put(s"${local}__staging/data", "new")
+    val err = intercept[IllegalArgumentException] {
+      PartitionSwap.replace(spark, live, stage)
+    }
+    assert(err.getMessage.contains("promoting"))
+    assert(read(s"$local/data").isEmpty)
+    assert(read(s"${local}__retired/data") == Some("old"),
+      "a failed promote must not delete the retired copy")
+    PartitionSwap.recoverDir(spark, live)
+    assert(read(s"$local/data") == Some("old"))
+    assert(read(s"${local}__retired/data").isEmpty)
+  }
+}
+
+/** The local file system under the `failpromote` scheme, whose `rename`
+  * reports failure (returns false, moves nothing) for every promote of a
+  * `<live>__staging` directory.
+  */
+class FailPromoteFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failpromote:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    !src.getName.endsWith("__staging") && super.rename(src, dst)
 }
