@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{Json, Session}
 import graft.operators.Shards
 import graft.text.CorpusPipeline
 
@@ -25,21 +26,6 @@ object CurateCli {
       nKept: Long,
       nShards: Int,
       auditOk: Boolean)
-
-  /** JSON string escape (backslash, quote, control chars) — free-form
-    * source/lang values must not corrupt the machine-readable report.
-    */
-  private def jstr(v: Any): String =
-    if (v == null) "null"
-    else "\"" + v.toString.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   def run(
       spark: SparkSession,
@@ -78,7 +64,7 @@ object CurateCli {
       .orderBy("source", "lang")
       .collect()
       .map(r =>
-        s"""{"source":${jstr(r.get(0))},"lang":${jstr(r.get(1))},""" +
+        s"""{"source":${Json.str(r.get(0))},"lang":${Json.str(r.get(1))},""" +
           s""""n_docs":${r.getLong(2)},"n_tokens":${r.getLong(3)}}""")
       .mkString("[", ",", "]")
     kept.unpersist()
@@ -228,8 +214,7 @@ object CurateCli {
     val exactDir = s"$outDir/exact"
     // a swap torn between retire and promote: the retired directory IS
     // the data — restore it before anything reads the live path
-    Seq(corpusDir, s"$searchDir/postings", s"$denseDir/assigned",
-      s"$exactDir/postings", s"$exactDir/sets", s"$outDir/profile/hll",
+    Seq(corpusDir, s"$denseDir/assigned", s"$outDir/profile/hll",
       s"$outDir/profile/hdr", s"$outDir/profile/kmv")
       .foreach(graft.operators.PartitionSwap.recoverDir(spark, _))
     val bootstrap = !exists(s"$indexDir/meta")
@@ -626,7 +611,7 @@ object CurateCli {
     Files.createDirectories(Paths.get(reportDir))
     Files.writeString(
       Paths.get(s"$reportDir/consent_audit.json"),
-      s"""{"purpose":${jstr(purpose)},"n_admissions":$nA,""" +
+      s"""{"purpose":${Json.str(purpose)},"n_admissions":$nA,""" +
         s""""n_violations":$nV}""" + "\n")
     ConsentAuditSummary(nA, nV)
   }
@@ -1988,20 +1973,6 @@ object CurateCli {
     s
   }
 
-  private def session(): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-curate")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** The dead-letter-resubmit remap argument:
     * `badPurpose=slug[,badPurpose=slug...]`. A quarantined purpose is
     * malformed BY DEFINITION (that is why it was quarantined), so the
@@ -2078,7 +2049,7 @@ object CurateCli {
           "[--consent <consentDir>]")
       val ci = args.indexOf("--consent")
       val cd = if (ci >= 0 && args.length > ci + 1) Some(args(ci + 1)) else None
-      val spark = session()
+      val spark = Session("graft-curate")
       val s = runAccess(spark, args(1), args(2), args(3), cd)
       println(s"[curate] access keys=${s.nKeys} corpus_rows=${s.nCorpus} " +
         s"band=${s.nBand} search=${s.nSearch} dense=${s.nDense} " +
@@ -2096,7 +2067,7 @@ object CurateCli {
           "<mapping.parquet> <stateDir> <reportDir> [--consent <consentDir>]")
       val ci = args.indexOf("--consent")
       val cd = if (ci >= 0 && args.length > ci + 1) Some(args(ci + 1)) else None
-      val spark = session()
+      val spark = Session("graft-curate")
       val s = runAccessBySubject(spark, args(1), args(2), args(3), args(4), cd)
       println(s"[curate] access-by-subject docs=${s.nKeys} " +
         s"corpus_rows=${s.nCorpus} band=${s.nBand} search=${s.nSearch} " +
@@ -2108,7 +2079,7 @@ object CurateCli {
     if (args.headOption.contains("consent-expire")) {
       require(args.length >= 3,
         "usage: CurateCli consent-expire <consentDir> <cutoffEpochMs>")
-      val spark = session()
+      val spark = Session("graft-curate")
       val n = graft.policy.Consent.expireVersions(spark, args(1), args(2).toLong)
       println(s"[consent-expire] superseded_versions_dropped=$n " +
         "(current verdicts untouched)")
@@ -2120,7 +2091,7 @@ object CurateCli {
     // batch under a purpose correction map, or deliberately purge
     if (args.headOption.contains("dead-letter")) {
       require(args.length >= 2, "usage: CurateCli dead-letter <consentDir>")
-      val spark = session()
+      val spark = Session("graft-curate")
       val rows = graft.policy.Consent.deadLetter(spark, args(1))
         .groupBy(col("batch"))
         .agg(count(lit(1)).as("n"),
@@ -2142,7 +2113,7 @@ object CurateCli {
       val si = args.indexOf("--state")
       val sd = if (si >= 0 && args.length > si + 1) Some(args(si + 1)) else None
       val remap = parseRemap(args(3))
-      val spark = session()
+      val spark = Session("graft-curate")
       val n = graft.policy.Consent.resubmitDeadLetter(
         spark, args(1), args(2).toLong, remap, stateDir = sd)
       println(s"[dead-letter] resubmitted=$n from batch=${args(2)} " +
@@ -2153,7 +2124,7 @@ object CurateCli {
     if (args.headOption.contains("dead-letter-purge")) {
       require(args.length >= 3,
         "usage: CurateCli dead-letter-purge <consentDir> <batch|all>")
-      val spark = session()
+      val spark = Session("graft-curate")
       val b = if (args(2) == "all") None else Some(args(2).toLong)
       val n = graft.policy.Consent.purgeDeadLetter(spark, args(1), b)
       println(s"[dead-letter] purged_batch_dirs=$n (deliberate drop — " +
@@ -2165,7 +2136,7 @@ object CurateCli {
       require(args.length >= 2,
         "usage: CurateCli fsck <stateDir> [--consent <consentDir>] " +
           "[--ledger <ledgerDir>]")
-      val spark = session()
+      val spark = Session("graft-curate")
       // --consent <dir> / --ledger <dir>: the registry and the DP
       // ledger live NEXT TO the state root, not under it, so the state
       // walk cannot discover them — the operator names them and the
@@ -2192,8 +2163,8 @@ object CurateCli {
       Files.writeString(
         Paths.get(s"${args(1)}/fsck_report.json"),
         checks.map(c =>
-          s"""{"component":${jstr(c.component)},"check":${jstr(c.check)},""" +
-            s""""ok":${c.ok},"detail":${jstr(c.detail)}}""")
+          s"""{"component":${Json.str(c.component)},"check":${Json.str(c.check)},""" +
+            s""""ok":${c.ok},"detail":${Json.str(c.detail)}}""")
           .mkString("[", ",", "]") + "\n")
       println(s"[fsck] ${checks.size} checks, $bad failed")
       spark.stop()
@@ -2203,7 +2174,7 @@ object CurateCli {
     if (args.headOption.contains("erase-logical")) {
       require(args.length >= 3,
         "usage: CurateCli erase-logical <keys.parquet> <stateDir>")
-      val spark = session()
+      val spark = Session("graft-curate")
       val (n, dirs) = runEraseLogical(spark, args(1), args(2))
       println(s"[curate] erase-logical keys=$n pending_vectors=$dirs " +
         "(serving masked now; run erase-settle to purge physically)")
@@ -2215,7 +2186,7 @@ object CurateCli {
         "usage: CurateCli erase-by-subject <subjects.parquet> " +
           "<mapping.parquet> <stateDir> [profileBudget]")
       val budget = if (args.length > 4) args(4).toLong else 0L
-      val spark = session()
+      val spark = Session("graft-curate")
       val s = runEraseBySubject(spark, args(1), args(2), args(3), budget)
       println(s"[curate] erase-by-subject docs=${s.nKeys} " +
         s"corpus=${s.nCorpus} band=${s.nBand} search=${s.nSearch} " +
@@ -2227,7 +2198,7 @@ object CurateCli {
       require(args.length >= 4,
         "usage: CurateCli erase-logical-by-subject <subjects.parquet> " +
           "<mapping.parquet> <stateDir>")
-      val spark = session()
+      val spark = Session("graft-curate")
       val (n, dirs) =
         runEraseLogicalBySubject(spark, args(1), args(2), args(3))
       println(s"[curate] erase-logical-by-subject docs=$n " +
@@ -2239,7 +2210,7 @@ object CurateCli {
       require(args.length >= 5,
         "usage: CurateCli consent-audit <stateDir> <consentDir> " +
           "<purpose> <reportDir>")
-      val spark = session()
+      val spark = Session("graft-curate")
       val s = runConsentAudit(spark, args(1), args(2), args(3), args(4))
       println(s"[curate] consent-audit purpose=${args(3)} " +
         s"admissions=${s.nAdmissions} violations=${s.nViolations}")
@@ -2249,7 +2220,7 @@ object CurateCli {
     }
     if (args.headOption.contains("break-lease")) {
       require(args.length >= 2, "usage: CurateCli break-lease <stateDir>")
-      val spark = session()
+      val spark = Session("graft-curate")
       val had = graft.operators.Lease.read(spark, args(1))
       val broke = graft.operators.Lease.break(spark, args(1))
       println(had match {
@@ -2264,7 +2235,7 @@ object CurateCli {
     }
     if (args.headOption.contains("erase-settle")) {
       require(args.length >= 2, "usage: CurateCli erase-settle <stateDir>")
-      val spark = session()
+      val spark = Session("graft-curate")
       runEraseSettle(spark, args(1)) match {
         case None => println("[curate] erase-settle: no pending vectors")
         case Some(s) => println(
@@ -2278,7 +2249,7 @@ object CurateCli {
     if (args.headOption.contains("records-expire")) {
       require(args.length >= 3,
         "usage: CurateCli records-expire <stateDir> <cutoffEpochMs>")
-      val spark = session()
+      val spark = Session("graft-curate")
       val (nAdm, nRes) = runRecordsExpire(spark, args(1), args(2).toLong)
       println(s"[records-expire] admission_batch_dirs=$nAdm " +
         s"resolve_captures=$nRes")
@@ -2288,7 +2259,7 @@ object CurateCli {
     if (args.headOption.contains("compact-vectors")) {
       require(args.length >= 2,
         "usage: CurateCli compact-vectors <stateDir>")
-      val spark = session()
+      val spark = Session("graft-curate")
       val trees = runCompactVectors(spark, args(1))
       trees.foreach { case (scope, b, a) =>
         println(s"[compact-vectors] $scope vectors $b -> $a")
@@ -2300,7 +2271,7 @@ object CurateCli {
       require(args.length >= 2, "usage: CurateCli compact <stateDir> [targetMB]")
       val target =
         if (args.length > 2) args(2).toLong << 20 else 128L << 20
-      val spark = session()
+      val spark = Session("graft-curate")
       val legs = runCompact(spark, args(1), target)
       legs.foreach { case (leg, b, a) =>
         println(s"[compact] $leg files $b -> $a")
@@ -2309,7 +2280,7 @@ object CurateCli {
       Files.writeString(
         Paths.get(s"${args(1)}/compact_report.json"),
         legs.map { case (leg, b, a) =>
-          s"""{"leg":${jstr(leg)},"files_before":$b,"files_after":$a}"""
+          s"""{"leg":${Json.str(leg)},"files_before":$b,"files_after":$a}"""
         }.mkString("[", ",", "]") + "\n")
       spark.stop()
       return
@@ -2318,7 +2289,7 @@ object CurateCli {
       require(args.length >= 3,
         "usage: CurateCli retention <stateDir> <keepBatches> [profileBudget]")
       val budget = if (args.length > 3) args(3).toLong else 0L
-      val spark = session()
+      val spark = Session("graft-curate")
       val s = runRetention(spark, args(1), args(2).toInt, budget)
       println(s"[curate] retention expired_batches=${s.nBatchesExpired} " +
         s"expired_docs=${s.nDocsExpired} corpus=${s.erase.nCorpus} " +
@@ -2331,7 +2302,7 @@ object CurateCli {
       require(args.length >= 3,
         "usage: CurateCli rectify <corrected.parquet> <stateDir> [profileBudget]")
       val budget = if (args.length > 3) args(3).toLong else 0L
-      val spark = session()
+      val spark = Session("graft-curate")
       val s = runRectify(spark, args(1), args(2), budget)
       println(s"[curate] rectify requested=${s.nRequested} matched=${s.nMatched} " +
         s"corpus=${s.nCorpus} band=${s.nBand} search=${s.nSearch} " +
@@ -2346,7 +2317,7 @@ object CurateCli {
       require(args.length >= 3,
         "usage: CurateCli erase <keys.parquet> <stateDir> [profileBudget]")
       val budget = if (args.length > 3) args(3).toLong else 0L
-      val spark = session()
+      val spark = Session("graft-curate")
       val s = runErase(spark, args(1), args(2), budget)
       println(s"[curate] erase keys=${s.nKeys} corpus=${s.nCorpus} " +
         s"band=${s.nBand} search=${s.nSearch} dense=${s.nDense} " +
@@ -2364,7 +2335,7 @@ object CurateCli {
           "[--model <dir> <minScore>] [--search] [--hybrid] [--profile] " +
           "[--exact] [--agg]")
       val nShards = if (args.length > 3) args(3).toInt else 64
-      val spark = session()
+      val spark = Session("graft-curate")
       val s = runIncremental(spark, args(1), args(2), nShards,
         cfg = gateConfig(spark, modelArgs), searchIndex = withSearch,
         hybridIndex = withHybrid, profileStats = withProfile,
@@ -2386,7 +2357,7 @@ object CurateCli {
     require(args.length >= 2,
       "usage: CurateCli <documents.parquet> <outDir> [nShards] [--model <dir> <minScore>]")
     val nShards = if (args.length > 2) args(2).toInt else 64
-    val spark = session()
+    val spark = Session("graft-curate")
     val s = run(spark, args(0), args(1), nShards,
       cfg = gateConfig(spark, modelArgs))
     println(s"[curate] in=${s.nIn} kept=${s.nKept} shards=${s.nShards} audit_ok=${s.auditOk}")

@@ -2,8 +2,6 @@ package graft.cli
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ingest.{HttpLoader, Ingest}
 
 /** Dataset download CLI — the engine twin of the reference's `make download`
@@ -32,15 +30,7 @@ object DownloadCli {
 
     val staged = HttpLoader.downloadTo(url, Paths.get(outDir, "raw", "services.jsonl"), cfg)
 
-    val spark = SparkSession
-      .builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-download")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-download")
 
     val (good, corrupt) = Ingest.readJsonl(spark, staged.toString)
     val sampled = args.lift(2).map(_.toInt) match {

@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Pipeline
@@ -44,16 +43,7 @@ object PipelineCli {
       if (positional.nonEmpty) EngineConfig(saltKey = positional.head)
       else EngineConfig()
 
-    val spark = SparkSession
-      .builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-pipeline")
 
     // Seed semantics: all-varchar CSV (dbt seed with column_types overrides,
     // dbt_project.yml:125-137); staging does the typing casts.

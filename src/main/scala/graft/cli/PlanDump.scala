@@ -2,15 +2,15 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Registry
 
 /** Dumps `explain("formatted")` physical plans for headline queries to a
   * markdown file — the plan-quality evidence trail (pushdown, pruning,
   * broadcast choice, partial aggregation, codegen spans).
   *
-  * Usage: PlanDump [sfDir] [outFile]
+  * Usage: PlanDump [sfDir] [outFile] [query ...]
+  *
+  * Named queries are dumped in place of the headline list.
   */
 object PlanDump {
 
@@ -136,19 +136,14 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out   = if (args.length > 1) args(1) else "docs/PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = if (args.length > 2) args.drop(2).toSeq else headline
+    val spark = graft.Session("graft-plandump")
 
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.cli.PlanDump)\n\n")
     sb.append(s"Source: `$sfDir`. Regenerate with " +
       "`sbt \"runMain graft.cli.PlanDump\"`.\n")
-    headline.foreach { name =>
+    names.foreach { name =>
       val df = Registry.all(name).fn(spark, sfDir)
       sb.append(s"\n## $name\n\n```\n")
       sb.append(df.queryExecution.explainString(

@@ -410,12 +410,10 @@ object Dedup {
   /** Crash recovery for the stored band index: replays a pending
     * multi-leg commit (append or erase — one `.swap-stage` root per
     * index, so any crashed commit classifies without knowing which
-    * operation staged it) and the legacy per-leg swaps. The mutators
-    * and [[loadBandIndex]] call it themselves.
+    * operation staged it). The mutators and [[loadBandIndex]] call it
+    * themselves.
     */
   def recoverBandIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/bands")
-    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/shingles")
     graft.operators.PartitionSwap.recover(spark, dir, "/.swap-stage", "")
   }
 

@@ -112,14 +112,12 @@ object SetSimJoin {
   }
 
   /** Crash recovery for the stored index: replays any pending
-    * append/erase commit ([[graft.operators.PartitionSwap]] marker) and
-    * the legacy per-leg erase swaps, after which sets and postings are
-    * consistent with each other — never a half-appended epoch. The
-    * mutators and [[searchIndex]] call it themselves.
+    * append/erase commit ([[graft.operators.PartitionSwap]] marker),
+    * after which sets and postings are consistent with each other —
+    * never a half-appended epoch. The mutators and [[searchIndex]] call
+    * it themselves.
     */
   def recoverIndex(spark: SparkSession, dir: String): Unit = {
-    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/sets")
-    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/postings")
     graft.operators.PartitionSwap.recover(spark, dir, "/.swap-stage", "")
   }
 

@@ -347,7 +347,6 @@ object Bm25 {
     * and the mutators call it themselves.
     */
   def recoverSearchIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    graft.operators.PartitionSwap.recoverDir(spark, s"$dir/postings")
     graft.operators.PartitionSwap.recover(spark, dir, "/.swap-stage", "")
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.ExplainMode
 
 import graft.queries.Registry
@@ -420,5 +422,45 @@ class PlanGuardSpec extends SparkSpec {
       }
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("Bench's counters charge each query's jobs to its own measured passes") {
+    val sc = spark.sparkContext
+    // a slow listener holds up the bus, as a loaded driver does: events
+    // then reach the counters well after the query has returned
+    val slow = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Thread.sleep(20)
+    }
+    sc.addSparkListener(slow)
+    val counters = new Bench.Counters(sc)
+    // Bench's methodology: a warmup pass over every named query, then each
+    // query's measured passes; counts per measured pass
+    def bench(names: Seq[String]): Seq[(Double, Double)] = {
+      names.foreach(Bench.runOnce(spark, dir, _))
+      names.map { n =>
+        val m = Bench.measure(spark, dir, counters, n)
+        assert(m.samples.forall(_ >= 0), s"$n failed")
+        (m.counts.jobs.toDouble / m.samples.size, m.counts.tasks.toDouble / m.samples.size)
+      }
+    }
+    val names = Seq("q1_agg", "q_mart_services")
+    val (together, alone) =
+      try (bench(names), names.flatMap(n => bench(Seq(n))))
+      finally { sc.removeSparkListener(slow); sc.removeSparkListener(counters) }
+    assert(together.forall(_._1 > 0))
+    assert(together == alone)
+  }
+
+  test("Bench's artifact stays valid JSON whatever the scale-factor path holds") {
+    val sfDir = "/data/sf \"0.1\"\\x\ttab\nline\u0001"
+    val m = Bench.Measured(Seq(0.5, 0.25, 0.75), Bench.Counts(6, 9, 30, 1500))
+    val art = new ObjectMapper().readTree(
+      Bench.artifact(Seq("q_a" -> m), warmupSec = 1.0, sfDir = sfDir))
+    assert(art.get("sf").asText == sfDir)
+    assert(art.get("queries").get("q_a").asDouble == 0.5)
+    assert(art.get("queries_min").get("q_a").asDouble == 0.25)
+    val c = art.get("counters").get("q_a")
+    assert((c.get("jobs").asLong, c.get("stages").asLong, c.get("tasks").asLong) == ((2L, 3L, 10L)))
+    assert(c.get("task_s").asDouble == 0.5)
   }
 }

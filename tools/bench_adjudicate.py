@@ -94,8 +94,10 @@ def self_check():
     with tempfile.TemporaryDirectory() as d:
         def art(name, samples):
             path = os.path.join(d, name)
+            counts = {"jobs": 4, "stages": 6, "tasks": 24, "task_s": 0.5}
             json.dump({"queries": {"q_a": min(samples), "q_b": 1.0},
-                       "samples": {"q_a": samples, "q_b": [1.0, 1.0]}},
+                       "samples": {"q_a": samples, "q_b": [1.0, 1.0]},
+                       "counters": {"q_a": counts, "q_b": counts}},
                       open(path, "w"))
             return path
         prev = art("prev.json", [1.0, 1.02, 0.98])
