@@ -641,7 +641,7 @@ object CurateCli {
     * rewrites the capture. An INCOMPLETE purged tree (no `_SUCCESS`) is
     * dropped: the original capture is still in place.
     */
-  private def recoverRectifyFacts(spark: SparkSession, outDir: String): Unit = {
+  private[graft] def recoverRectifyFacts(spark: SparkSession, outDir: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val facts = new org.apache.hadoop.fs.Path(s"$outDir/.rectify-facts")
@@ -650,7 +650,7 @@ object CurateCli {
       fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
     if (done(purged) && !done(facts)) {
       fs.delete(facts, true)
-      fs.rename(purged, facts)
+      require(fs.rename(purged, facts), s"rectify facts: restoring $purged to $facts failed")
     } else fs.delete(purged, true)
   }
 
@@ -662,7 +662,7 @@ object CurateCli {
     * the one window between the delete and the rename. Re-running the
     * purge is idempotent (an anti-join only ever removes the same rows).
     */
-  private def purgePendingRectifyFacts(
+  private[graft] def purgePendingRectifyFacts(
       spark: SparkSession,
       outDir: String,
       keys: DataFrame
@@ -677,8 +677,10 @@ object CurateCli {
       .join(broadcast(keys), Seq("doc_id"), "left_anti")
       .write.mode("overwrite").parquet(purgedPath)
     fs.delete(new org.apache.hadoop.fs.Path(factsPath), true)
-    fs.rename(new org.apache.hadoop.fs.Path(purgedPath),
-      new org.apache.hadoop.fs.Path(factsPath))
+    require(fs.rename(new org.apache.hadoop.fs.Path(purgedPath),
+      new org.apache.hadoop.fs.Path(factsPath)),
+      s"rectify facts: promoting $purgedPath over $factsPath failed; " +
+        "the purged capture stays for the next sweep's heal")
   }
 
   /** GDPR erasure sweep over EVERY maintained leg of an incremental
@@ -783,8 +785,8 @@ object CurateCli {
       } else None
     val aggDir = s"$outDir/agg"
     val hasAgg = exists(aggDir)
-    // true while the crashed rectification's agg merge has NOT committed:
-    // the agg store lags the corpus for the capture's matched ids
+    // true while the crashed rectification's one agg commit has NOT
+    // landed: the agg store lags the corpus for the capture's matched ids
     val aggLags = pendingBatch.exists(b => !PartitionSwap.alreadyApplied(
       spark, aggDir, PartitionSwap.legBatchId(b, "rectify-agg-merge")))
 
@@ -1750,9 +1752,9 @@ object CurateCli {
     * carries an `embedding` column.
     *
     * Leg order: the gate aggregate, the facts capture and the corpus
-    * rewrite run in sequence. Then agg (subtract and merge; its
-    * `agg-updated` failpoint fires inside the leg, after the merge
-    * commits), band index, BM25, exact, dense and one leg per
+    * rewrite run in sequence. Then agg (old facts out and corrected facts
+    * in, one commit; its `agg-updated` failpoint fires inside the leg,
+    * after that commit), band index, BM25, exact, dense and one leg per
     * `shards/batch=N` directory run at the same time under one
     * [[graft.operators.Par.run]] — the [[runErase]] argument and failure
     * semantics. The profile ledger and the facts delete follow in
@@ -1853,10 +1855,10 @@ object CurateCli {
     // heartbeat around the overlapped legs (Lease.renew scaladoc)
     graft.operators.Lease.renew(spark, outDir)
 
-    // maintained per-source aggregate: subtract the captured OLD facts
-    // (cnt/sum exactly; min/max rebuilt from the corpus MINUS the
-    // subjects), then merge the corrected facts back — group for group
-    // the result is a one-shot groupBy over the corrected corpus
+    // maintained per-source aggregate: the captured OLD facts out (min/max
+    // rebuilt from the corpus MINUS the subjects) and the corrected facts
+    // in, under ONE commit whose id runErase's `aggLags` reads; its steps
+    // reach the failpoint as `agg-commit-<step>`
     val aggDir = s"$outDir/agg"
     def aggLeg(): Long = {
       val nAgg =
@@ -1870,25 +1872,16 @@ object CurateCli {
                 .join(broadcast(matchedIds), Seq("doc_id"), "left_anti")
                 .select(col("source"), col("n_tokens")))
             else None
-          // per-leg ids ([[PartitionSwap.legBatchId]]): several legs commit
-          // into shared _batches namespaces, and additive offsets from a
-          // 64-bit content hash can land one sweep's offset id on another
-          // sweep's base (or a streaming epoch's small integer id),
-          // silently no-opping a leg via alreadyApplied
-          val n = AggStore.erase(spark, aggDir,
-            facts.select(col("source"), col("n_tokens")),
-            Seq("source"), col("n_tokens").cast("long"),
-            buckets = AggBuckets,
-            batchId = PartitionSwap.legBatchId(batchBase, "rectify-agg-sub"),
-            retainedFacts = retained)
           val newFacts = facts.select(col("doc_id"), col("source"))
             .join(broadcast(derived.select(col("doc_id"), col("n_tokens"))),
               Seq("doc_id"))
-          AggStore.merge(spark, aggDir,
-            AggStore.aggregate(newFacts, Seq("source"), col("n_tokens").cast("long")),
-            Seq("source"), buckets = AggBuckets,
-            batchId = PartitionSwap.legBatchId(batchBase, "rectify-agg-merge"))
-          n
+          val tokens = col("n_tokens").cast("long")
+          AggStore.rewrite(spark, aggDir, Seq("source"), AggBuckets,
+            PartitionSwap.legBatchId(batchBase, "rectify-agg-merge"),
+            removed = Some(AggStore.Removed(
+              facts.select(col("source"), col("n_tokens")), tokens, retained)),
+            added = Some(AggStore.aggregate(newFacts, Seq("source"), tokens)),
+            beforeStep = step => failpoint(s"agg-commit-$step"))
         } else 0L
       failpoint("agg-updated")
       nAgg

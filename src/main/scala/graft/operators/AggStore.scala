@@ -24,10 +24,12 @@ import org.apache.spark.sql.functions._
   *
   * Layout: parquet partitioned by `bucket` = [[StableHash.bucket]] of
   * the group key, so a batch touches only the buckets its groups hash
-  * into — the [[graft.pipeline.Snapshot]] bucketed-store shape — and
-  * the merge rewrites just those directories under the [[PartitionSwap]]
-  * crash protocol. Count/sum merges are NOT idempotent, so batch-id
-  * markers make replays no-ops (the foreachBatch exactly-once recipe).
+  * into — the [[graft.pipeline.Snapshot]] bucketed-store shape. One
+  * body, [[rewrite]], rewrites just those directories under ONE
+  * [[PartitionSwap]] commit for a merge, an erasure, or a rectification
+  * (old facts out and corrected states in, together). Count/sum merges
+  * are NOT idempotent, so batch-id markers make replays no-ops (the
+  * foreachBatch exactly-once recipe).
   *
   * At scale: the store is |groups| rows; a batch merge reads its
   * touched buckets (|groups|-bounded), aggregates the batch with
@@ -53,6 +55,10 @@ object AggStore {
     states.withColumn("bucket",
       StableHash.bucket(concat_ws("", groupCols.map(col): _*), buckets))
 
+  private def writeBuckets(states: DataFrame, parts: Int, groupCols: Seq[String], dir: String) =
+    states.repartition(parts, col("bucket"))
+      .sortWithinPartitions(col("bucket") +: groupCols.map(col): _*)
+      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
 
   /** Pin the stored state schema. Spark widens decimal sums per
     * aggregation (decimal(18,2) -> 28,2 at the batch aggregate -> 38,2
@@ -84,11 +90,7 @@ object AggStore {
     require(buckets > 0, s"agg store: buckets must be positive, got $buckets")
     require(!states.columns.contains("bucket"),
       "agg store: input must not already have a bucket column")
-    withBucket(canonical(states), groupCols, buckets)
-      .repartition(buckets, col("bucket"))
-      .sortWithinPartitions(col("bucket") +: groupCols.map(col): _*)
-      .write.mode("overwrite")
-      .partitionBy("bucket").parquet(dir)
+    writeBuckets(withBucket(canonical(states), groupCols, buckets), buckets, groupCols, dir)
   }
 
   def load(spark: SparkSession, dir: String): DataFrame = {
@@ -98,8 +100,8 @@ object AggStore {
 
   /** Merge one batch of group states: same-group rows combine
     * algebraically; only the touched buckets are read and rewritten
-    * ([[PartitionSwap]] commit). Replays of an applied `batchId` are
-    * no-ops.
+    * ([[rewrite]]). The first non-empty batch bootstraps the store.
+    * Replays of an applied `batchId` are no-ops.
     */
   def merge(
       spark: SparkSession,
@@ -109,65 +111,7 @@ object AggStore {
       buckets: Int,
       batchId: Long
   ): Unit = {
-    require(buckets > 0, s"agg store: buckets must be positive, got $buckets")
-    require(!batchStates.columns.contains("bucket"),
-      "agg store: batch must not already have a bucket column")
-    PartitionSwap.recover(spark, dir, ".merge-stage", "bucket=")
-    if (PartitionSwap.alreadyApplied(spark, dir, batchId)) return
-
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // bootstrap keys on DATA presence, not directory existence: an empty
-    // first batch leaves only markers behind (a partitionBy write of zero
-    // rows emits NO files, and loading it would die on schema inference),
-    // so the first NON-empty batch must still take the bootstrap path
-    val hasData = fs.exists(dirPath) &&
-      fs.listStatus(dirPath).exists(_.getPath.getName.startsWith("bucket="))
-    if (!hasData) {
-      if (batchStates.isEmpty) {
-        PartitionSwap.markApplied(spark, dir, batchId)
-        return
-      }
-      // bootstrap THROUGH the stage + commit protocol, not a direct
-      // overwrite of the live tree: a crash mid-bootstrap would leave a
-      // partial set of live bucket= directories, hasData would read true
-      // on replay, and the replayed batch would MERGE into its own
-      // partial data. Staged, a crash before the pending marker leaves
-      // the live tree empty (replay re-bootstraps); after it, recover's
-      // entry-list rollback deletes the newly-promoted buckets.
-      val stage = stageDir(dir)
-      write(batchStates, groupCols, stage, buckets)
-      PartitionSwap.commit(spark, dir, stage,
-        PartitionSwap.listEntries(spark, stage, "bucket="), batchId)
-      return
-    }
-
-    val batch = withBucket(canonical(batchStates), groupCols, buckets)
-    val touched = batch.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.nonEmpty) {
-      val slice = spark.read.parquet(dir)
-        .filter(col("bucket").isin(touched.toSeq: _*))
-      val merged = canonical(
-        slice
-          .unionByName(batch)
-          .groupBy((groupCols :+ "bucket").map(col): _*)
-          .agg(
-            sum(col("cnt")).as("cnt"),
-            sum(col("sum")).as("sum"),
-            min(col("min")).as("min"),
-            max(col("max")).as("max")))
-      val stage = stageDir(dir)
-      merged
-        .repartition(touched.length, col("bucket"))
-        .sortWithinPartitions(col("bucket") +: groupCols.map(col): _*)
-        .write.mode("overwrite")
-        .partitionBy("bucket").parquet(stage)
-      PartitionSwap.commit(spark, dir, stage,
-        touched.toSeq.map(b => s"bucket=$b"), batchId)
-    } else {
-      PartitionSwap.markApplied(spark, dir, batchId)
-    }
+    val _ = rewrite(spark, dir, groupCols, buckets, batchId, None, Some(batchStates))
   }
 
   /** Serve the aggregate: per group (cnt, sum, min, max, avg) — avg
@@ -200,13 +144,10 @@ object AggStore {
     *     [[graft.sketch.ProfileStore]] honesty convention: what cannot
     *     be subtracted is accounted, not faked).
     *
-    * Scale shape: erasure requests are request-sized, so `erasedFacts`
-    * aggregates to a handful of group states; only their buckets are
-    * read and rewritten ([[PartitionSwap]] commit — a bucket whose last
-    * group empties is DELETED through the same marker), and the
-    * min/max rebuild scans `retainedFacts` pre-filtered by a broadcast
-    * semi-join on the touched groups. Replays of an applied `batchId`
-    * are no-ops. Returns the number of stored group rows affected.
+    * Scale shape: `erasedFacts` is request-sized; only its buckets are
+    * rewritten ([[rewrite]]; a bucket whose last group empties is DELETED
+    * by the same commit), and the rebuild scans `retainedFacts` semi-joined
+    * to the touched groups. Returns the stored group rows affected.
     */
   def erase(
       spark: SparkSession,
@@ -217,102 +158,162 @@ object AggStore {
       buckets: Int,
       batchId: Long,
       retainedFacts: Option[DataFrame] = None
+  ): Long =
+    rewrite(spark, dir, groupCols, buckets, batchId,
+      Some(Removed(erasedFacts, valueCol, retainedFacts)), None)
+
+  /** Facts leaving the store; `retained` is the history without them ([[erase]]). */
+  private[graft] final case class Removed(facts: DataFrame, valueCol: Column, retained: Option[DataFrame])
+
+  /** The one touched-bucket rewrite: [[merge]] passes added states,
+    * [[erase]] removed facts, the rectify sweep both (old facts out,
+    * corrected states in). It reads the touched buckets once, subtracts
+    * and audits the removed cnt/sum, rebuilds or charges their min/max
+    * ([[erase]]), folds the added states in by the merge law, and lands
+    * the stage with ONE [[PartitionSwap.commit]] under `batchId`: the
+    * store is wholly before or wholly after the call. `beforeStep` is
+    * the commit's fault-injection hook.
+    */
+  private[graft] def rewrite(
+      spark: SparkSession,
+      dir: String,
+      groupCols: Seq[String],
+      buckets: Int,
+      batchId: Long,
+      removed: Option[Removed],
+      added: Option[DataFrame],
+      beforeStep: Int => Unit = _ => ()
   ): Long = {
     require(buckets > 0, s"agg store: buckets must be positive, got $buckets")
+    require(added.forall(!_.columns.contains("bucket")),
+      "agg store: batch must not already have a bucket column")
     PartitionSwap.recover(spark, dir, ".merge-stage", "bucket=")
     if (PartitionSwap.alreadyApplied(spark, dir, batchId)) return 0L
+    val stage = stageDir(dir)
+    def commit(entries: Seq[String]): Unit =
+      PartitionSwap.commit(spark, dir, stage, entries, batchId, beforeStep)
 
-    val eStates = withBucket(
-      canonical(aggregate(erasedFacts, groupCols, valueCol)), groupCols, buckets)
+    // merge's bootstrap keys on DATA presence, not directory existence: an
+    // empty first batch leaves only markers behind (a partitionBy write of
+    // zero rows emits NO files, and loading it would die on schema
+    // inference), so the first NON-empty batch must still bootstrap
+    if (removed.isEmpty && PartitionSwap.listEntries(spark, dir, "bucket=").isEmpty) {
+      // bootstrap THROUGH the stage + commit protocol, not a direct
+      // overwrite of the live tree: a crash mid-bootstrap would leave a
+      // partial set of live bucket= directories, the replay would find
+      // data, and the replayed batch would MERGE into its own partial
+      // data. Staged, a crash before the pending marker leaves
+      // the live tree empty (replay re-bootstraps); after it, recover's
+      // entry-list rollback deletes the newly-promoted buckets.
+      added.filterNot(_.isEmpty) match {
+        case Some(states) =>
+          write(states, groupCols, stage, buckets)
+          commit(PartitionSwap.listEntries(spark, stage, "bucket="))
+        case None => PartitionSwap.markApplied(spark, dir, batchId)
+      }
+      return 0L
+    }
+
+    // the removed facts' states: request-sized and cached, since the
+    // touched list, the audit, the rebuild and the stage all read them
+    val eStates = removed.map(r => withBucket(
+      canonical(aggregate(r.facts, groupCols, r.valueCol)), groupCols, buckets)
       .select(
         (groupCols.map(col) :+ col("bucket")) ++ Seq(
           col("cnt").as("_cnt_e"), col("sum").as("_sum_e"),
           col("min").as("_min_e"), col("max").as("_max_e")): _*)
-      .cache()
-    val touched = eStates.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).sorted
+      .cache())
+    val addStates = added.map(a => withBucket(canonical(a), groupCols, buckets))
+    val touched = (eStates ++ addStates).map(_.select(col("bucket")))
+      .reduceOption(_ union _)
+      .fold(Array.empty[Int])(_.distinct().collect().map(_.getInt(0)).sorted)
     if (touched.isEmpty) {
-      eStates.unpersist()
+      eStates.foreach(_.unpersist())
       PartitionSwap.markApplied(spark, dir, batchId)
       return 0L
     }
 
     val slice = spark.read.parquet(dir)
       .filter(col("bucket").isin(touched.toSeq: _*))
-    val joined = slice.join(broadcast(eStates), groupCols :+ "bucket", "left")
-    val subtracted = joined
-      .withColumn("cnt", col("cnt") - coalesce(col("_cnt_e"), lit(0L)))
-      .withColumn("sum",
-        col("sum") - coalesce(col("_sum_e"), lit(0).cast(joined.schema("sum").dataType)))
-
-    // one audit pass over the (bucket-sized) subtracted slice: how many
-    // stored groups the request touches, and whether any would go negative
-    val audit = subtracted.agg(
-      sum(when(col("_cnt_e").isNotNull, 1L).otherwise(0L)).as("_affected"),
-      sum(when(col("cnt") < 0L, 1L).otherwise(0L)).as("_neg")).head()
-    val affected = Option(audit.getAs[Long]("_affected")).getOrElse(0L)
-    val negatives = Option(audit.getAs[Long]("_neg")).getOrElse(0L)
-    require(negatives == 0L,
-      s"agg store erase: $negatives groups would go negative — the erased " +
-        "facts are not a subset of the maintained history")
-
+    var affected = 0L
     var cachedRebuilt: Option[DataFrame] = None
-    val kept = retainedFacts match {
-      case Some(retained) =>
-        val touchedGroups = eStates.select(groupCols.map(col): _*).distinct()
-        // cached: request-sized, and both the cross-check and the staged
-        // write read it — the retained-facts scan must run ONCE
-        val rebuilt = withBucket(
-          canonical(aggregate(
-            retained.join(broadcast(touchedGroups), groupCols, "left_semi"),
-            groupCols, valueCol)),
-          groupCols, buckets)
-          .cache()
-        cachedRebuilt = Some(rebuilt)
-        // exactness cross-check: the subtracted cnt/sum must equal the
-        // rebuilt ones group-for-group (groups fully erased appear in
-        // neither). Request-sized on both sides.
-        val zeroSum = lit(0).cast(joined.schema("sum").dataType)
-        val mismatches = subtracted
-          .filter(col("_cnt_e").isNotNull)
-          .select(groupCols.map(col) :+ col("cnt").as("_c") :+ col("sum").as("_s"): _*)
-          .join(rebuilt, groupCols, "full")
-          // null-safe: a fully-erased group is absent from the rebuild
-          // and must have subtracted down to exactly (0, 0)
-          .filter(!(coalesce(col("_c"), lit(0L)) <=> coalesce(col("cnt"), lit(0L)) &&
-            coalesce(col("_s"), zeroSum) <=> coalesce(col("sum"), zeroSum)))
-          .count()
-        require(mismatches == 0L,
-          s"agg store erase: $mismatches touched groups disagree between " +
-            "cnt/sum subtraction and the retained-facts rebuild — erased " +
-            "and retained frames are inconsistent with the maintained history")
-        subtracted
-          .filter(col("_cnt_e").isNull)
-          .select(slice.columns.map(col): _*)
-          .unionByName(rebuilt.select(slice.columns.map(col): _*))
-      case None =>
-        // cnt/sum exact; min/max kept, staleness charged for groups
-        // whose stored extreme belonged to an erased row
-        val stale = joined
-          .filter(col("_cnt_e").isNotNull)
-          .filter(col("min") === col("_min_e") || col("max") === col("_max_e"))
-          .count()
-        chargeStaleness(spark, dir, stale)
-        subtracted
-          .filter(col("cnt") > 0L)
-          .select(slice.columns.map(col): _*)
-    }
+    val kept = (removed zip eStates).fold(slice) { case (r, e) =>
+      val joined = slice.join(broadcast(e), groupCols :+ "bucket", "left")
+      val zeroSum = lit(0).cast(joined.schema("sum").dataType)
+      val subtracted = joined
+        .withColumn("cnt", col("cnt") - coalesce(col("_cnt_e"), lit(0L)))
+        .withColumn("sum", col("sum") - coalesce(col("_sum_e"), zeroSum))
 
-    val stage = stageDir(dir)
-    canonical(kept)
-      .repartition(touched.length, col("bucket"))
-      .sortWithinPartitions(col("bucket") +: groupCols.map(col): _*)
-      .write.mode("overwrite")
-      .partitionBy("bucket").parquet(stage)
-    eStates.unpersist()
+      // one audit pass over the (bucket-sized) subtracted slice: how many
+      // stored groups the request touches, and whether any would go negative
+      val audit = subtracted.agg(
+        sum(when(col("_cnt_e").isNotNull, 1L).otherwise(0L)).as("_affected"),
+        sum(when(col("cnt") < 0L, 1L).otherwise(0L)).as("_neg")).head()
+      affected = Option(audit.getAs[Long]("_affected")).getOrElse(0L)
+      val negatives = Option(audit.getAs[Long]("_neg")).getOrElse(0L)
+      require(negatives == 0L,
+        s"agg store erase: $negatives groups would go negative — the erased " +
+          "facts are not a subset of the maintained history")
+
+      r.retained match {
+        case Some(retained) =>
+          val touchedGroups = e.select(groupCols.map(col): _*).distinct()
+          // cached: request-sized, and both the cross-check and the staged
+          // write read it — the retained-facts scan must run ONCE
+          val rebuilt = withBucket(
+            canonical(aggregate(
+              retained.join(broadcast(touchedGroups), groupCols, "left_semi"),
+              groupCols, r.valueCol)),
+            groupCols, buckets)
+            .cache()
+          cachedRebuilt = Some(rebuilt)
+          // exactness cross-check: the subtracted cnt/sum must equal the
+          // rebuilt ones group-for-group (groups fully erased appear in
+          // neither). Request-sized on both sides.
+          val mismatches = subtracted
+            .filter(col("_cnt_e").isNotNull)
+            .select(groupCols.map(col) :+ col("cnt").as("_c") :+ col("sum").as("_s"): _*)
+            .join(rebuilt, groupCols, "full")
+            // null-safe: a fully-erased group is absent from the rebuild
+            // and must have subtracted down to exactly (0, 0)
+            .filter(!(coalesce(col("_c"), lit(0L)) <=> coalesce(col("cnt"), lit(0L)) &&
+              coalesce(col("_s"), zeroSum) <=> coalesce(col("sum"), zeroSum)))
+            .count()
+          require(mismatches == 0L,
+            s"agg store erase: $mismatches touched groups disagree between " +
+              "cnt/sum subtraction and the retained-facts rebuild — erased " +
+              "and retained frames are inconsistent with the maintained history")
+          subtracted
+            .filter(col("_cnt_e").isNull)
+            .select(slice.columns.map(col): _*)
+            .unionByName(rebuilt.select(slice.columns.map(col): _*))
+        case None =>
+          // cnt/sum exact; min/max kept, staleness charged for groups
+          // whose stored extreme belonged to an erased row
+          val stale = joined
+            .filter(col("_cnt_e").isNotNull)
+            .filter(col("min") === col("_min_e") || col("max") === col("_max_e"))
+            .count()
+          chargeStaleness(spark, dir, stale)
+          subtracted
+            .filter(col("cnt") > 0L)
+            .select(slice.columns.map(col): _*)
+      }
+    }
+    // the added states fold in by the merge law
+    val merged = addStates.fold(kept)(a =>
+      kept.unionByName(a)
+        .groupBy((groupCols :+ "bucket").map(col): _*)
+        .agg(
+          sum(col("cnt")).as("cnt"),
+          sum(col("sum")).as("sum"),
+          min(col("min")).as("min"),
+          max(col("max")).as("max")))
+
+    writeBuckets(canonical(merged), touched.length, groupCols, stage)
+    eStates.foreach(_.unpersist())
     cachedRebuilt.foreach(_.unpersist())
-    PartitionSwap.commit(spark, dir, stage,
-      touched.toSeq.map(b => s"bucket=$b"), batchId)
+    commit(touched.toSeq.map(b => s"bucket=$b"))
     affected
   }
 

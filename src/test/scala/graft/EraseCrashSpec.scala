@@ -65,6 +65,17 @@ class EraseCrashSpec extends SparkSpec {
     s"$work/state"
   }
 
+  /** The same corpus with the band index, BM25 and shard legs the overlap
+    * and agg-commit cases compare, built once.
+    */
+  private lazy val searchState: String = {
+    val work = tmp("golden_search")
+    docs.write.parquet(s"$work/b0")
+    assert(CurateCli.runIncremental(spark, s"$work/b0", s"$work/state", nShards = 2,
+      searchIndex = true, aggStats = true).auditOk)
+    s"$work/state"
+  }
+
   test("erase sweep killed at EVERY failpoint converges on replay; agg stays exact") {
     Seq("facts-captured", "rectify-facts-purged", "corpus-purged", "agg-erased")
       .foreach { fp =>
@@ -120,10 +131,7 @@ class EraseCrashSpec extends SparkSpec {
     // lands while they run, and their first job after it must be
     // cancelled before it writes anything
     val work = tmp("overlap")
-    docs.write.parquet(s"$work/b0")
-    val golden = s"$work/golden"
-    assert(CurateCli.runIncremental(spark, s"$work/b0", golden, nShards = 2,
-      searchIndex = true, aggStats = true).auditOk)
+    val golden = searchState
     spark.read.parquet(s"$golden/corpus").select(col("doc_id"))
       .filter(col("doc_id") % 3 === 0).write.parquet(s"$work/keys")
     val twin = s"$work/twin"
@@ -154,15 +162,9 @@ class EraseCrashSpec extends SparkSpec {
     assert(crash.at == "agg-erased")
     assert(heldAtCrash >= 2, "the band and BM25 legs must be mid-leg at the crash")
     // the lease is released only after every leg stopped: it is gone when
-    // the verb throws, and every job of the overlapped legs — the held
-    // legs' first jobs after the crash included — ended before that
+    // the verb throws
     assert(!exists(s"$state/.lease"))
-    org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
-    sc.removeSparkListener(jobs)
     assert(resumedAtThrow >= 2, "the held legs must resume before the verb returns")
-    assert(jobs.tagged.nonEmpty)
-    jobs.tagged.foreach(id => assert(jobs.ended.get(id) <= thrownAt,
-      s"job $id of a sweep leg ended after the sweep threw"))
     // the held legs were cancelled before they wrote: their stores are
     // still the pre-sweep ones, with no commit started
     val held = Seq("index/bands", "index/shingles", "search/postings",
@@ -173,6 +175,23 @@ class EraseCrashSpec extends SparkSpec {
     assert(!exists(s"$state/search/_batches/_pending") &&
       !exists(s"$state/index/_batches/_pending"),
       "a cancelled leg must not have started its commit")
+    // every job of the overlapped legs — the held legs' first jobs after
+    // the crash included — started before the throw and has ended; the
+    // listener stayed on through the store reads above, so a leg still
+    // running after the throw would show here. (Not "ended before the
+    // throw": Spark wakes a cancelled job's waiter before it stamps and
+    // posts the job's end, so an end time can trail the throw by a few ms.)
+    val deadline = System.currentTimeMillis() + 10000L
+    do org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+    while (!jobs.tagged.forall(jobs.ended.containsKey) &&
+      System.currentTimeMillis() < deadline)
+    sc.removeSparkListener(jobs)
+    assert(jobs.tagged.nonEmpty)
+    jobs.tagged.foreach { id =>
+      assert(jobs.started.get(id) <= thrownAt,
+        s"job $id of a sweep leg started after the sweep threw")
+      assert(jobs.ended.containsKey(id), s"job $id of a sweep leg never ended")
+    }
 
     // the replay converges to the uncrashed twin, leaves no stage behind
     // and audits clean
@@ -222,13 +241,16 @@ class EraseCrashSpec extends SparkSpec {
     }
   }
 
-  /** End times of the jobs carrying `tag` (set at the crash). */
+  /** Start and end times of the jobs carrying `tag` (set at the crash). */
   private final class TaggedJobs extends org.apache.spark.scheduler.SparkListener {
     @volatile var tag: String = "-"
     private val tags = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val ended = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
       tags.put(j.jobId, Option(j.properties.getProperty("spark.job.tags")).getOrElse(""))
+      started.put(j.jobId, j.time)
+    }
     override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
       ended.put(j.jobId, j.time)
     def tagged: Seq[Int] = {
@@ -314,6 +336,69 @@ class EraseCrashSpec extends SparkSpec {
       assert(spark.read.parquet(s"$a/corpus")
         .filter(col("doc_id") === x).isEmpty)
     }
+  }
+
+  test("rectify killed at EVERY agg commit step -> erase -> heal -> erase equals erase-then-rectify on a twin") {
+    // the agg leg's rewrite and commit are one: killed at any step of its
+    // PartitionSwap.commit the store is all-old or all-new for the matched
+    // ids, and runErase's aggLags (keyed on the commit's applied marker)
+    // reads which. A subtraction committed apart from its merge would make
+    // the interleaved erase capture facts the store no longer holds and
+    // abort its cross-check on every later run
+    val work = tmp("aggsteps")
+    val golden = searchState
+    // two admitted subjects of one source (one touched bucket): x is erased
+    // mid-rectification, y only rectified
+    val corpus = spark.read.parquet(s"$golden/corpus")
+    val src = corpus.orderBy(col("doc_id")).select(col("source")).as[String].head()
+    val ids = corpus.filter(col("source") === src).orderBy(col("doc_id"))
+      .select(col("doc_id")).as[Long].take(2)
+    val (x, y) = (ids(0), ids(1))
+    Seq((x, "corrected text for the erased subject spark spark"),
+      (y, "corrected text for the retained subject stream stream"))
+      .toDF("doc_id", "text")
+      .write.parquet(s"$work/corrected")
+    Seq(x).toDF("doc_id").write.parquet(s"$work/keys")
+
+    // the twin: erase first, then a clean rectification, which lands ONE
+    // applied marker in the agg store
+    val twin = s"$work/twin"
+    copyDir(golden, twin)
+    CurateCli.runErase(spark, s"$work/keys", twin)
+    def aggMarkers(s: String) = fsOf(s).listStatus(
+      new org.apache.hadoop.fs.Path(s"$s/agg/_batches")).map(_.getPath.getName).toSet
+    val before = aggMarkers(twin)
+    CurateCli.runRectify(spark, s"$work/corrected", twin)
+    assert((aggMarkers(twin) -- before).size == 1,
+      "a rectify must land exactly one applied agg marker")
+    val twinAgg = aggRows(AggStore.serve(spark, s"$twin/agg"))
+    val twinRows = storeRows(twin)
+
+    var step = 0
+    var crashed = true
+    while (crashed) {
+      val a = s"$work/a$step"
+      copyDir(golden, a)
+      val thrown = scala.util.Try(CurateCli.runRectify(spark, s"$work/corrected", a,
+        failpoint = killAt(s"agg-commit-$step"))).failed.toOption
+      thrown.foreach(e => assert(e.getMessage == s"agg-commit-$step", e))
+      crashed = thrown.isDefined
+      if (crashed) {
+        CurateCli.runErase(spark, s"$work/keys", a)
+        CurateCli.runRectify(spark, s"$work/corrected", a)
+        CurateCli.runErase(spark, s"$work/keys", a)
+        assert(aggRows(AggStore.serve(spark, s"$a/agg")) == twinAgg,
+          s"killed at agg commit step $step: agg store must equal the twin's")
+        assert(storeRows(a) == twinRows,
+          s"killed at agg commit step $step: corpus, band, BM25 and shard " +
+            "rows must equal the twin's")
+        assert(!exists(s"$a/agg.merge-stage") && !exists(s"$a/.rectify-facts") &&
+          !exists(s"$a/.erase-facts"))
+        step += 1
+      }
+    }
+    // retire, promote, applied marker and cleanup were all interrupted
+    assert(step >= 10, s"the agg commit ran only $step steps")
   }
 
   test("re-erasing the SAME key set after re-admission subtracts again (nonce-stamped capture)") {

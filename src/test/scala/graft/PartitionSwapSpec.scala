@@ -293,14 +293,40 @@ class PartitionSwapSpec extends SparkSpec {
     assert(read(s"$local/data") == Some("old"))
     assert(read(s"${local}__retired/data").isEmpty)
   }
+
+  test("a refused rename in the rectify-facts roll-forward throws and keeps the purged capture") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failpromote.impl", classOf[FailPromoteFileSystem].getName)
+    val local = tmp("failpurge")
+    val out = s"failpromote://$local"
+    Seq((1L, "a", 3), (2L, "a", 5)).toDF("doc_id", "source", "n_tokens")
+      .withColumn("_batch", org.apache.spark.sql.functions.lit(7L))
+      .write.parquet(s"$local/.rectify-facts")
+    val purged = s"$local/.rectify-facts.purged/_SUCCESS"
+    val err = intercept[IllegalArgumentException] {
+      graft.cli.CurateCli.purgePendingRectifyFacts(spark, out, Seq(1L).toDF("doc_id"))
+    }
+    assert(err.getMessage.contains("promoting"))
+    assert(read(purged).isDefined, "a refused promote must keep the purged capture")
+    // the heal's rename is refused too: it throws, and the capture stays
+    intercept[IllegalArgumentException](graft.cli.CurateCli.recoverRectifyFacts(spark, out))
+    assert(read(purged).isDefined)
+    // a rename that lands puts the purged capture in place
+    graft.cli.CurateCli.recoverRectifyFacts(spark, local)
+    assert(spark.read.parquet(s"$local/.rectify-facts").select("doc_id").as[Long]
+      .collect().toSeq == Seq(2L))
+    assert(read(purged).isEmpty)
+  }
 }
 
 /** The local file system under the `failpromote` scheme, whose `rename`
   * reports failure (returns false, moves nothing) for every promote of a
-  * `<live>__staging` directory.
+  * `<live>__staging` directory or of a `.rectify-facts.purged` capture.
   */
 class FailPromoteFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("failpromote:///")
   override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
-    !src.getName.endsWith("__staging") && super.rename(src, dst)
+    !src.getName.endsWith("__staging") && !src.getName.endsWith(".purged") &&
+      super.rename(src, dst)
 }
