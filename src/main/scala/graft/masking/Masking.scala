@@ -4,6 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Lower
+
 /** The masking / privacy expression library — pure `Column` expressions,
   * one function per operator of the reference's macro library
   * (reference: the macros under dbt_project/macros/privacy/; SURVEY.md §2.1 #1-#12).
@@ -47,7 +49,7 @@ object Masking {
       presentAndNonEmpty(c),
       concat(
         lit("user_"),
-        substring(lower(hex(sha2(concat(lower(trim(c)), lit(salt)), 256))), 1, 16),
+        substring(Lower.lower(hex(sha2(concat(Lower.lower(trim(c)), lit(salt)), 256))), 1, 16),
         lit("@" + outputDomain)
       )
     ).otherwise(lit(null).cast(StringType))
@@ -60,7 +62,7 @@ object Masking {
     * after the first `@`, NULL unless `is_valid_email`.
     */
   def extractEmailDomain(c: Column): Column =
-    when(isValidEmail(c), lower(c.substr(instr(c, "@") + 1, length(c))))
+    when(isValidEmail(c), Lower.lower(c.substr(instr(c, "@") + 1, length(c))))
       .otherwise(lit(null).cast(StringType))
 
   /** #4 `privacy__mask_phone` (mask_phone.sql:29-43): first `keepChars` chars

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Lower
+
 /** Blocked record linkage: probabilistic-style entity resolution over
   * structured records (Fellegi & Sunter, JASA 1969 — here with fixed field
   * weights rather than EM-learned ones, so both engines replay the score
@@ -31,7 +33,7 @@ object RecordLinkage {
     * Spark replaces all.)
     */
   def normalize(c: Column): Column =
-    regexp_replace(lower(c), "[^a-z0-9 ]", "")
+    regexp_replace(Lower.lower(c), "[^a-z0-9 ]", "")
 
   /** Normalized-edit-distance similarity in [0,1]: `1 - lev/maxlen`,
     * 1.0 for two empty strings.

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.Lower
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * language ID, quality scoring, token counting, document fingerprinting.
   * All pure `Column` expressions (codegen-friendly, no UDFs) — at 100 TB
@@ -48,7 +50,7 @@ object TextAnalysis {
   }
 
   def langIdOf(c: Column, t: Column): Column = {
-    def hits(sw: Seq[String]) = size(filter(t, x => lower(x).isin(sw: _*)))
+    def hits(sw: Seq[String]) = size(filter(t, x => Lower.lower(x).isin(sw: _*)))
     val en = hits(stopwordsEn); val fr = hits(stopwordsFr)
     val de = hits(stopwordsDe); val es = hits(stopwordsEs)
     val best = greatest(en, fr, de, es)
@@ -189,7 +191,7 @@ object TextAnalysis {
 
   /** Whitespace-normalized md5 content fingerprint. */
   def fingerprintMd5(c: Column): Column =
-    md5(lower(regexp_replace(trim(c), "\\s+", " ")))
+    md5(Lower.lower(regexp_replace(trim(c), "\\s+", " ")))
 
   /** Rolling (order-sensitive) fingerprint: md5-chain left-fold over tokens,
     * seeded with the first token — exactly DuckDB's seedless `list_reduce`

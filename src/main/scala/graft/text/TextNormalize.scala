@@ -9,6 +9,8 @@ import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.Lower
+
 /** Unicode NFC normalization + canonical text cleanup — the step BEFORE
   * any hashing operator (exact dedup, MinHash, winnowing, shard keys): the
   * same visible text arrives from the web in composed ("é") and
@@ -48,7 +50,7 @@ object TextNormalize {
     val composed = nfc(c)
     val noZw = regexp_replace(composed, "[\\u200B\\u200C\\u200D\\uFEFF]", "")
     val oneSpace = trim(regexp_replace(noZw, "\\s+", " "))
-    if (lowercase) lower(oneSpace) else oneSpace
+    if (lowercase) Lower.lower(oneSpace) else oneSpace
   }
 }
 

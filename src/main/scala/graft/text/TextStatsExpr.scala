@@ -137,9 +137,12 @@ object TextStatsExpr {
       val t = toks(j)
       sumLen += t.codePointCount(0, t.length)
       if (EnCs.contains(t)) swEnCs += 1
-      // lowercase through UTF8String — the exact code path Spark's lower()
-      // takes — so locale-sensitive JVMs (e.g. -Duser.language=tr) can't
-      // make this diverge from the HOF twin
+      // lowercase through UTF8String's JVM case mapping, which no
+      // -Duser.language (e.g. tr) can change. The HOF twin's lower() maps
+      // non-ASCII through ICU under Spark's default
+      // spark.sql.icu.caseMappings.enabled, and the two disagree on 67 code
+      // points (U+A7C0, U+2C2F, U+1C89, U+10570, ...); every lowercase of
+      // those is non-ASCII and the stopwords are ASCII, so hits cannot differ
       val lw = UTF8String.fromString(t).toLowerCase.toString
       if (En.contains(lw)) en += 1
       if (Fr.contains(lw)) fr += 1

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicReference
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 
@@ -38,14 +38,16 @@ class ParSpec extends SparkSpec {
   private def parTag(): String =
     sc.getJobTags().find(_.startsWith("graft-par-")).get
 
-  /** Records job start properties and job end times. */
+  /** Records job start properties, start times and end times. */
   private final class Jobs extends SparkListener {
     val tags = new ConcurrentHashMap[Int, String]()
     val groups = new ConcurrentHashMap[Int, String]()
+    val started = new ConcurrentHashMap[Int, java.lang.Long]()
     val ended = new ConcurrentHashMap[Int, java.lang.Long]()
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       tags.put(j.jobId, Option(j.properties.getProperty("spark.job.tags")).getOrElse(""))
       groups.put(j.jobId, Option(j.properties.getProperty("spark.jobGroup.id")).getOrElse(""))
+      started.put(j.jobId, j.time)
     }
     override def onJobEnd(j: SparkListenerJobEnd): Unit = ended.put(j.jobId, j.time)
     def withTag(tag: String): Seq[Int] =
@@ -75,25 +77,29 @@ class ParSpec extends SparkSpec {
     val slowMarker = dir.resolve("after-long-job")
     val chainMarker = dir.resolve("after-job-chain")
     val tag = new AtomicReference[String]()
+    // legs that have returned or thrown, counted by the legs themselves
+    val returned = new AtomicInteger()
+    def leg(body: => Unit): () => Unit = () => try body finally returned.incrementAndGet()
     listening { jobs =>
       val boom = Boom("leg 0 failed")
       val t0 = System.currentTimeMillis()
       val e = intercept[Boom] {
         Par.run[Unit](Seq(
-          () => {
+          leg {
             tag.set(parTag())
             Thread.sleep(300) // let the siblings' jobs start
             throw boom
           },
           // a slower sibling inside one long job, writing after it
-          () => { longJob(); Files.writeString(slowMarker, "x") },
+          leg { longJob(); Files.writeString(slowMarker, "x") },
           // a sibling that keeps starting short jobs, writing after them
-          () => {
+          leg {
             (1 to 10000).foreach(_ => sc.parallelize(1 to 10, 2).count())
             Files.writeString(chainMarker, "x")
           }))
       }
       val thrownAt = System.currentTimeMillis()
+      assert(returned.get() == 3, "run threw before every leg had returned")
       // the root cause, not a sibling's "job cancelled" error; the
       // siblings' errors ride along as suppressed
       assert(e eq boom)
@@ -102,15 +108,21 @@ class ParSpec extends SparkSpec {
       assert(!Files.exists(slowMarker), "a sibling wrote after its cancelled long job")
       assert(!Files.exists(chainMarker), "a sibling wrote after its cancelled job chain")
 
-      // no job of the call is active once run has thrown: every job
-      // carrying the tag ended no later than the throw
-      org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+      // no job of the call outlives run: every job carrying the tag
+      // started no later than the throw, and has ended. (Not "ended before
+      // the throw": Spark wakes a cancelled job's waiter before it stamps
+      // and posts the job's end, so an end time can trail the throw by a
+      // few ms.)
+      val deadline = System.currentTimeMillis() + 10000L
+      do org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+      while (!jobs.withTag(tag.get()).forall(jobs.ended.containsKey) &&
+        System.currentTimeMillis() < deadline)
       val tagged = jobs.withTag(tag.get())
       assert(tagged.nonEmpty)
       tagged.foreach { id =>
-        val end = jobs.ended.get(id)
-        assert(end != null && end.longValue <= thrownAt,
-          s"job $id of the failed call ended after run threw")
+        assert(jobs.started.get(id) <= thrownAt,
+          s"job $id of the failed call started after run threw")
+        assert(jobs.ended.containsKey(id), s"job $id of the failed call never ended")
       }
       val ids = sc.statusTracker.getJobIdsForTag(tag.get())
       assert(ids.toSet == tagged.toSet)

@@ -16,6 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   else fails here.
   * - A `SparkSession` builder lives in `graft.Session` only, so every main
   *   runs the same session.
+  * - A Column is lowercased through `graft.functions.Lower` only, so no
+  *   ASCII value loads Spark's 1.1M-code-point case table.
   */
 class SwapGuardSpec extends AnyFunSuite {
 
@@ -43,7 +45,19 @@ class SwapGuardSpec extends AnyFunSuite {
       """SparkSession\s*\.builder|\.builder\(\)""".r,
       "Session.scala",
       Set("Session.scala" -> Some("apply")),
-      "SparkSession builder outside graft.Session (call graft.Session instead)"))
+      "SparkSession builder outside graft.Session (call graft.Session instead)"),
+    // Spark's lower(), or functions.lower(), as a Column call; the three
+    // query files hold lower() in SQL text only
+    Guard("src/main lowercases a Column only through graft.functions.Lower",
+      """(?<![\w.])lower\(|functions\.lower\(""".r,
+      "Lower.scala",
+      Set(
+        "Lower.scala" -> None,
+        "OracleSql.scala" -> None,
+        "Registry.scala" -> None,
+        "ExtensionQueries.scala" -> None),
+      "Column-API lower() outside graft.functions.Lower (call Lower.lower, " +
+        "which skips Spark's case-table initializer on ASCII values)"))
 
   // an object member: a `def` at the two-space member indentation
   private val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r
