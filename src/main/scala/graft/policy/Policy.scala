@@ -116,9 +116,13 @@ final case class PolicyCatalog(models: Map[String, Map[String, ColumnPolicy]]) {
     models.getOrElse(model, Map.empty)
 
   /** All PII columns across the catalog — the "graph scan" of
-    * generate_pii_report.sql:25-54, re-expressed as catalog iteration.
+    * generate_pii_report.sql:25-54, re-expressed as catalog iteration —
+    * ordered by the UTF-8 bytes of (model, column), Spark's binary string
+    * order.
     */
-  def piiColumns: Seq[PiiInventoryRow] =
+  def piiColumns: Seq[PiiInventoryRow] = {
+    val utf8: Ordering[Array[Byte]] = (a, b) => java.util.Arrays.compareUnsigned(a, b)
+    def bytes(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     (for {
       (model, cols) <- models.toSeq
       (column, pol) <- cols.toSeq
@@ -130,7 +134,8 @@ final case class PolicyCatalog(models: Map[String, Map[String, ColumnPolicy]]) {
       anonymization_method = pol.anonymizationMethod.map(_.name).getOrElse("none"),
       legal_basis = pol.legalBasis.getOrElse("not_documented"),
       sensitivity = pol.sensitivity.getOrElse("unspecified")
-    )).sortBy(r => (r.model_name, r.column_name))
+    )).sortBy(r => (bytes(r.model_name), bytes(r.column_name)))(Ordering.Tuple2(utf8, utf8))
+  }
 
   /** Counts used by the reference's log-only summary
     * (generate_pii_report.sql:103-137). */

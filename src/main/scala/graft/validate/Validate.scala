@@ -1,11 +1,11 @@
 package graft.validate
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField}
 
 import graft.policy.PolicyCatalog
+import graft.sketch.BottomK
 
 /** The compliance / audit query suite — Spark re-expression of the
   * reference's Python validator, singular dbt test, and PII report
@@ -29,14 +29,18 @@ object Validate {
     * string column, sample distinct non-null values and regex-test them.
     * Returns rows (column_name, value, pattern) for each hit.
     *
-    * One pass over the table, whatever its width: every string column is
-    * stacked into `(column_name, value)` — cast to the default
-    * `StringType`, so columns of different collations share one array —
-    * and one `distinct` runs over the stack. Each column then keeps at
-    * most `sampleSize` of its distinct values, chosen by a hash of the
-    * value (a deterministic sample, ties broken by the value itself), so
-    * the regex work stays bounded regardless of table size. A column with
-    * at most `sampleSize` distinct values is scanned exhaustively.
+    * One global aggregation over the table, whatever its width: each
+    * string column — cast to the default `StringType`, so collated columns
+    * scan too — feeds one [[graft.sketch.BottomKValues]] aggregate that
+    * keeps the at most `sampleSize` distinct non-null values with the
+    * smallest `(xxhash64(value), value)` (a deterministic sample, ties
+    * broken by the value's UTF-8 bytes). Each task forwards one buffer row
+    * of at most `sampleSize` values per column; no `distinct` and no
+    * window runs over the table. The one result row is exploded to
+    * `(column_name, value)` and the three regexes run over it (first
+    * match wins), so the regex work stays bounded regardless of table
+    * size. A column with at most `sampleSize` distinct values is scanned
+    * exhaustively.
     */
   def piiScan(df: DataFrame, sampleSize: Int = 100): DataFrame = {
     val spark = df.sparkSession
@@ -51,19 +55,16 @@ object Validate {
       "phone"   -> PhonePattern,
       "address" -> AddressPattern
     )
-    val stacked = df
-      .select(explode(array(stringCols.map { c =>
-        struct(lit(c).as("column_name"), col(c).cast(StringType).as("value"))
-      }: _*)).as("_kv"))
-      .select(col("_kv.column_name"), col("_kv.value"))
-      .filter(col("value").isNotNull)
-      .distinct()
-    val sample = Window.partitionBy(col("column_name"))
-      .orderBy(xxhash64(col("value")), col("value"))
+    val samples = stringCols.zipWithIndex.map { case (c, i) =>
+      val v = col(c).cast(StringType)
+      BottomK.values(xxhash64(v), v, sampleSize).as(s"_s$i")
+    }
     val hits = patterns.map { case (name, p) => when(col("value").rlike(p), name) }
-    stacked
-      .withColumn("_r", row_number().over(sample))
-      .filter(col("_r") <= sampleSize)
+    df.agg(samples.head, samples.tail: _*)
+      .select(explode(array(stringCols.zipWithIndex.map { case (c, i) =>
+        struct(lit(c).as("column_name"), col(s"_s$i").as("values"))
+      }: _*)).as("_kv"))
+      .select(col("_kv.column_name"), explode(col("_kv.values")).as("value"))
       .withColumn("pattern", coalesce(hits: _*))
       .filter(col("pattern").isNotNull)
       .select(col("column_name"), col("value"), col("pattern"))
@@ -179,13 +180,15 @@ object Validate {
   /** The PII inventory report (generate_pii_report.sql:20-93): one row per
     * PII-tagged column in the catalog, ordered by (model, column); the
     * reference's graph scan becomes catalog iteration — purely driver-side
-    * metadata, materialized as a tiny DataFrame.
+    * metadata, materialized as a tiny DataFrame. The catalog returns the
+    * rows in Spark's binary string order, so the frame is a local relation
+    * and no sort job runs.
     */
   def piiReport(spark: SparkSession, catalog: PolicyCatalog): DataFrame = {
     import spark.implicits._
     val rows = catalog.piiColumns
     if (rows.nonEmpty)
-      rows.toDF().orderBy("model_name", "column_name")
+      rows.toDF()
     else
       // Empty-catalog fallback row (generate_pii_report.sql:83-91).
       Seq(

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.Pipeline
 import graft.policy.{ColumnPolicy, EngineConfig, MaskMethod, PolicyCatalog}
@@ -185,6 +188,133 @@ class PipelineSpec extends SparkSpec {
     assert(hits == Seq(("contact_email", "raw@real-domain.fr", "email")))
   }
 
+  /** The scan before the bottom-k aggregate, kept as its reference: stack
+    * every string cell, `distinct`, then rank each column's values by
+    * `(xxhash64(value), value)` and keep the first `k`.
+    */
+  private def windowScan(df: DataFrame, k: Int): DataFrame = {
+    val stringCols = df.schema.fields.collect { case StructField(n, _: StringType, _, _) => n }.toSeq
+    val hits = Seq("email" -> Validate.EmailPattern, "phone" -> Validate.PhonePattern,
+      "address" -> Validate.AddressPattern).map { case (name, p) => when(col("value").rlike(p), name) }
+    df.select(explode(array(stringCols.map { c =>
+        struct(lit(c).as("column_name"), col(c).cast("string").as("value"))
+      }: _*)).as("_kv"))
+      .select(col("_kv.column_name"), col("_kv.value"))
+      .filter(col("value").isNotNull)
+      .distinct()
+      .withColumn("_r", row_number().over(
+        Window.partitionBy(col("column_name")).orderBy(xxhash64(col("value")), col("value"))))
+      .filter(col("_r") <= k)
+      .withColumn("pattern", coalesce(hits: _*))
+      .filter(col("pattern").isNotNull)
+      .select(col("column_name"), col("value"), col("pattern"))
+  }
+
+  /** 4,000 seeded rows over 12 partitions: per column more distinct values
+    * than the largest k, a third of them PII, nulls, empty strings,
+    * non-ASCII text (including a code point whose UTF-8 and UTF-16 orders
+    * disagree) and a UTF8_LCASE column with case variants of one value.
+    */
+  private def scanFrame: DataFrame = {
+    val rnd = new scala.util.Random(11)
+    def pick(i: Int): String = i % 9 match {
+      case 0 => s"agent$i@mairie-$i.fr"
+      case 1 => s"+33 ${1 + i % 9} 23 45 67 ${10 + i % 90}"
+      case 2 => s"${i + 1} rue de l'Église $i"
+      case 3 => s"user_$i@anonymized.gouv.fr"
+      case 4 => ""
+      case 5 => s"café ☕ $i"
+      case 6 => s"Ａ $i"
+      case 7 => s"😀 $i"
+      case _ => s"Agent${i - 8}@Mairie-${i - 8}.FR" // case 0's value, upper-cased
+    }
+    val rows = (0 until 4000).map { _ =>
+      def v(n: Int) = if (rnd.nextInt(8) == 0) null else pick(rnd.nextInt(n))
+      (v(900), v(300), v(450), rnd.nextInt(100))
+    }
+    rows.toDF("a", "b", "c", "n")
+      .select(col("a"), col("b"), collate(col("c"), "UTF8_LCASE").as("c"), col("n"))
+      .repartition(12)
+  }
+
+  test("pii scan: the bottom-k aggregate equals the distinct + row_number sample") {
+    val df = scanFrame.cache()
+    try {
+      assert(df.rdd.getNumPartitions >= 8)
+      for (k <- Seq(1, 7, 100)) {
+        val got = Validate.piiScan(df, k).as[(String, String, String)].collect()
+        val want = windowScan(df, k).as[(String, String, String)].collect()
+        assert(got.length == got.toSet.size, s"k=$k: duplicate hits")
+        assert(got.toSet == want.toSet, s"k=$k")
+        if (k == 100) assert(want.map(_._3).toSet == Set("email", "phone", "address"))
+        // the sample itself, before the regexes, in its order
+        val sample = df.agg(
+          graft.sketch.BottomK.values(xxhash64(col("a")), col("a"), k).as("s"))
+          .head().getSeq[String](0)
+        val ranked = df.select(col("a").as("value")).filter(col("value").isNotNull).distinct()
+          .withColumn("_r", row_number().over(Window.orderBy(xxhash64(col("value")), col("value"))))
+          .filter(col("_r") <= k).orderBy("_r").as[(String, Int)].collect().map(_._1).toSeq
+        assert(sample == ranked, s"k=$k")
+      }
+    } finally df.unpersist()
+  }
+
+  test("bottom-k aggregate: with a constant hash it keeps the k binary-smallest values") {
+    val df = scanFrame
+    val utf8 = Ordering.fromLessThan[String] { (x, y) =>
+      UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y)) < 0
+    }
+    val all = df.select(col("a")).as[String].collect().filter(_ != null).distinct.sorted(utf8)
+    // the UTF-16 order differs from the binary one on this data
+    assert(all.toSeq != all.sorted.toSeq)
+    for (k <- Seq(1, 7, 100)) {
+      val got = df.agg(graft.sketch.BottomK.values(lit(0L), col("a"), k)).head().getSeq[String](0)
+      assert(got == all.take(k).toSeq, s"k=$k")
+    }
+  }
+
+  test("pii scan: unchanged when the object hash aggregate falls back to sort") {
+    val conf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val df = scanFrame.cache()
+    // grouped by column, the fallback serializes partial buffers and merges
+    // them again in the same task; the global scan is checked under it too.
+    // Returns the per-column samples and the tasks that fell back.
+    def grouped(k: Int): (Map[String, Seq[String]], Long) = {
+      val q = df
+        .select(explode(array(Seq("a", "b", "c").map { c =>
+          struct(lit(c).as("column_name"), col(c).cast("string").as("value"))
+        }: _*)).as("_kv"))
+        .groupBy(col("_kv.column_name").as("column_name"))
+        .agg(graft.sketch.BottomK.values(xxhash64(col("_kv.value")), col("_kv.value"), k).as("s"))
+      val out = q.collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+      val aggs = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(q.queryExecution.executedPlan) {
+          case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
+        }
+      assert(aggs.nonEmpty, q.queryExecution.executedPlan.toString)
+      (out, aggs.map(_.metrics("numTasksFallBacked").value).sum)
+    }
+    def run() = Seq(1, 7, 100).map { k =>
+      val (samples, fellBack) = grouped(k)
+      (Validate.piiScan(df, k).as[(String, String, String)].collect().toSet, samples, fellBack)
+    }
+    try {
+      val before = run()
+      val prev = spark.conf.getOption(conf)
+      spark.conf.set(conf, "1")
+      val after =
+        try run()
+        finally prev match {
+          case Some(v) => spark.conf.set(conf, v)
+          case None => spark.conf.unset(conf)
+        }
+      assert(after.map(r => (r._1, r._2)) == before.map(r => (r._1, r._2)))
+      assert(before.forall(_._2.size == 3))
+      assert(before.forall(_._3 == 0L), before.map(_._3))
+      assert(after.forall(_._3 > 0L), after.map(_._3))
+    } finally df.unpersist()
+  }
+
   test("policy catalog rejects unsecured PII columns (validate_pii_metadata)") {
     val ex = intercept[IllegalArgumentException] {
       PolicyCatalog(Map("m" -> Map("c" -> ColumnPolicy(pii = true))))
@@ -197,6 +327,20 @@ class PipelineSpec extends SparkSpec {
     assert(rpt.length == 5)
     assert(rpt.map(_.getAs[String]("column_name")).toSeq ==
       Seq("contact_email", "contact_phone", "latitude", "longitude", "street_address"))
+  }
+
+  test("pii report rows come in Spark's binary order without a sort") {
+    // U+FF21 sorts before U+1F600 in UTF-8 bytes and after it in UTF-16
+    val pii = ColumnPolicy(pii = true, anonymizationMethod = Some(MaskMethod.Suppress))
+    val cat = PolicyCatalog(Map(
+      "m" -> Map("Ａ" -> pii, "😀" -> pii, "é" -> pii, "a" -> pii),
+      "M" -> Map("x" -> pii)))
+    val rpt = Validate.piiReport(spark, cat)
+    def keys(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val got = keys(rpt)
+    assert(got == keys(rpt.orderBy("model_name", "column_name")))
+    assert(got != got.sorted)
+    assert(!rpt.queryExecution.optimizedPlan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Sort]))
   }
 
   test("suppress method nulls the column; unknown method passes through") {

@@ -368,9 +368,10 @@ class PlanGuardSpec extends SparkSpec {
     // 20k synthesized services (the ServicesSynth rules over a seeded key
     // range, as the anonymize_batch benchmark generates them): the geo
     // release finishes Mondrian in-task after the global ranges, and the
-    // PII scan is one pass however many string columns the mart has. The
-    // round loop ran ~6 jobs per round (~80 here) and the per-column
-    // scan two per string column; both bounds are structural now.
+    // PII scan is one global aggregation however many string columns the
+    // mart has. The round loop ran ~6 jobs per round (~80 here), the
+    // per-column scan two per string column and the stacked distinct +
+    // window scan four; both bounds are structural now.
     val s = spark.newSession() // the synthesis reads a `customer` temp view
     s.range(7000001L, 7020001L, 1, 4)
       .selectExpr("id as c_custkey",
@@ -388,15 +389,36 @@ class PlanGuardSpec extends SparkSpec {
     }
     val (nGroups, geoJobs) = jobs("jobbound-geo")(
       graft.pipeline.Pipeline.geoRelease(staged, 5).get.count())
-    val (nHits, scanJobs) = jobs("jobbound-scan")(
-      graft.validate.Validate.piiScan(mart).count())
+    // records each shuffle-map task of the scan wrote
+    val scanStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val mapRecords = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "jobbound-scan"))
+          e.stageIds.foreach(scanStages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (scanStages.contains(e.stageId) && e.taskType == "ShuffleMapTask" && e.taskMetrics != null)
+          mapRecords.add(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    sc.addSparkListener(listener)
+    val (nHits, scanJobs) =
+      try jobs("jobbound-scan")(graft.validate.Validate.piiScan(mart).count())
+      finally sc.removeSparkListener(listener)
     assert(nGroups > 1000L, s"the release must actually split: $nGroups groups")
     assert(nHits == 0L, s"$nHits PII hits in the mart")
     // 11 observed: the under-k probe, the global ranges, the `_gid`
     // exchange, the finish's checkpoint, the deepest-round read and the
     // envelope aggregate, each AQE stage a job
     assert(geoJobs <= 14, s"geoRelease ran $geoJobs jobs")
-    assert(scanJobs <= 4, s"piiScan ran $scanJobs jobs")
+    // 2 observed: the partial aggregation's map stage and the final
+    // aggregate with the explode and regexes, each AQE stage a job
+    assert(scanJobs <= 2, s"piiScan ran $scanJobs jobs")
+    // map-side combined: each input partition sends one buffer row, not
+    // its distinct values
+    import scala.jdk.CollectionConverters._
+    val records = mapRecords.asScala.toSeq
+    assert(records.nonEmpty, "the scan ran no shuffle-map task")
+    assert(records.forall(_ <= 1L), s"shuffle records per map task: $records")
   }
 
   test("canon guard: no compared output carries decimal or array columns") {
