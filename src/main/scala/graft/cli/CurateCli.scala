@@ -263,7 +263,8 @@ object CurateCli {
           .select(col("doc_id"))
         kept.join(flags, Seq("doc_id"), "left_semi").cache()
       }
-    val nFresh = fresh.count()
+    // a bootstrap (or empty) batch admits `kept` itself: its count is known
+    val nFresh = if (fresh eq kept) nKept else fresh.count()
     val nDup = nKept - nFresh
 
     // next batch ordinal = count of existing batch STATS files — written

@@ -203,8 +203,17 @@ object Dedup {
         posexplode(array((0 until bands).map(i => col(s"band_$i")): _*))
           .as(Seq("band", "hash")))
 
-  /** Distinct md5-shingle set per document (the verification side of the
-    * against-corpus paths): (out, shOut).
+  /** Distinct word k-shingles of a text, as the shingle strings
+    * themselves: the one verify-side representation of the inline, stored
+    * and streaming near-dup paths. Raw text, not digests: a 3-word shingle
+    * averages ~16 characters where its md5 hex is 32, and the Jaccard is
+    * exact by construction (no digest collisions to bound).
+    */
+  def shingleSet(text: Column, shingleK: Int): Column =
+    array_distinct(wordShingles(text, shingleK))
+
+  /** Distinct shingle set per document ([[shingleSet]]; the verification
+    * side of the against-corpus paths): (out, shOut).
     */
   def shingleSets(
       df: DataFrame,
@@ -214,15 +223,13 @@ object Dedup {
       out: String,
       shOut: String
   ): DataFrame =
-    df.select(
-      col(idCol).as(out),
-      array_distinct(transform(wordShingles(col(textCol), shingleK), x => md5(x)))
-        .as(shOut))
+    df.select(col(idCol).as(out), shingleSet(col(textCol), shingleK).as(shOut))
 
   /** A persisted-or-persistable corpus LSH index bundle: the exploded band
-    * table, the per-document distinct md5-shingle sets, and the parameters
-    * that built them (a batch banded with different parameters can never
-    * collide correctly, so the parameters travel WITH the data).
+    * table, the per-document distinct shingle sets ([[shingleSet]]: the
+    * shingle text, not digests), and the parameters that built them (a
+    * batch banded with different parameters can never collide correctly,
+    * so the parameters travel WITH the data).
     *
     * `bands` columns:    (idCol, band, hash)
     * `shingles` columns: (idCol, shingles: array<string>)
@@ -252,9 +259,10 @@ object Dedup {
       shingleSets(corpus, idCol, textCol, shingleK, idCol, "shingles"))
 
   /** Persist an index bundle under `dir` (`bands/` partitioned by band,
-    * `shingles/`, and a single-row `meta/` carrying the parameters).
-    * Two write jobs, each one corpus scan — the one-off cost that every
-    * subsequent [[dedupAgainstCorpus]] batch avoids.
+    * `shingles/`, and a single-row `meta/` carrying the parameters and the
+    * [[ShingleForm]] marker). Two write jobs, each one corpus scan — the
+    * one-off cost that every subsequent [[dedupAgainstCorpus]] batch
+    * avoids.
     */
   def writeBandIndex(index: BandIndex, dir: String): Unit = {
     index.bands
@@ -262,10 +270,39 @@ object Dedup {
     index.shingles.write.mode("overwrite").parquet(s"$dir/shingles")
     val spark = index.bands.sparkSession
     import spark.implicits._
-    Seq((index.idCol, index.shingleK, index.numHashes, index.numBands))
-      .toDF("id_col", "shingle_k", "num_hashes", "num_bands")
+    Seq((index.idCol, index.shingleK, index.numHashes, index.numBands, ShingleForm))
+      .toDF("id_col", "shingle_k", "num_hashes", "num_bands", "shingle_form")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/meta")
+  }
+
+  /** The `meta/` marker of the `shingles/` leg's representation. Indexes
+    * written before it held md5 hex digests in the same `array<string>`
+    * column; verifying raw shingles against those would score every pair
+    * at Jaccard 0 and admit every near-duplicate, so [[bandMeta]] refuses
+    * an index without it.
+    */
+  val ShingleForm = "text"
+
+  /** The stored parameters of a band index (its `meta/` row). */
+  final case class BandMeta(idCol: String, shingleK: Int, numHashes: Int, numBands: Int)
+
+  /** The one reader of a band index's `meta/`: refuses an index whose
+    * shingle sets are not in [[ShingleForm]]. Read-only (no recovery), so
+    * [[graft.operators.Fsck.bandIndex]] audits through it too.
+    */
+  def bandMeta(spark: org.apache.spark.sql.SparkSession, dir: String): BandMeta = {
+    val m = spark.read.parquet(s"$dir/meta").head()
+    val form =
+      if (m.schema.fieldNames.contains("shingle_form")) Option(m.getAs[String]("shingle_form"))
+      else None
+    require(form.contains(ShingleForm),
+      s"band index $dir: meta/ has shingle_form=${form.getOrElse("<absent>")}, " +
+        s"want '$ShingleForm' — its shingles/ leg predates raw-text shingle sets " +
+        "(md5 hex digests) and cannot verify against them; rebuild it with " +
+        "writeBandIndex(buildBandIndex(corpus, ...), dir)")
+    BandMeta(m.getAs[String]("id_col"), m.getAs[Int]("shingle_k"),
+      m.getAs[Int]("num_hashes"), m.getAs[Int]("num_bands"))
   }
 
   /** Append `docs`' band/shingle rows to a stored index — the admit step
@@ -334,7 +371,7 @@ object Dedup {
   ): Long = {
     import graft.operators.Erasure
     recoverBandIndex(spark, dir)
-    val idCol = spark.read.parquet(s"$dir/meta").head().getAs[String]("id_col")
+    val idCol = bandMeta(spark, dir).idCol
     val k = keys.select(col(keyCol).as(idCol))
     // both legs stage and promote under ONE commit: a crash between the
     // bands and shingles purges would otherwise leave an index whose
@@ -434,8 +471,7 @@ object Dedup {
   ): (Int, Int) = {
     import graft.operators.{Compaction, PartitionSwap}
     recoverBandIndex(spark, dir)
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val idCol = meta.getAs[String]("id_col")
+    val idCol = bandMeta(spark, dir).idCol
     val stage = s"$dir/.swap-stage"
     val fs = new org.apache.hadoop.fs.Path(stage)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -451,19 +487,18 @@ object Dedup {
     (before, after)
   }
 
-  /** Load a stored index bundle written by [[writeBandIndex]]. */
+  /** Load a stored index bundle written by [[writeBandIndex]]; like every
+    * mutator of the stored index, refuses one [[bandMeta]] refuses.
+    */
   def loadBandIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): BandIndex = {
     recoverBandIndex(spark, dir)
-    val m = spark.read.parquet(s"$dir/meta").head()
-    val idCol = m.getAs[String]("id_col")
+    val m = bandMeta(spark, dir)
+    val idCol = m.idCol
     BandIndex(
-      idCol,
-      m.getAs[Int]("shingle_k"),
-      m.getAs[Int]("num_hashes"),
-      m.getAs[Int]("num_bands"),
+      idCol, m.shingleK, m.numHashes, m.numBands,
       spark.read.parquet(s"$dir/bands").select(col(idCol), col("band"), col("hash")),
       spark.read.parquet(s"$dir/shingles").select(col(idCol), col("shingles")))
   }
@@ -580,10 +615,7 @@ object Dedup {
     // the corpus shingle expression is written HERE, above the join — the
     // optimizer does not push expensive expressions below joins, so it
     // evaluates only on rows that survived the candidate prune
-    val shCid = storedShingleCol
-      .map(col)
-      .getOrElse(
-        array_distinct(transform(wordShingles(col(textCol), shingleK), x => md5(x))))
+    val shCid = storedShingleCol.map(col).getOrElse(shingleSet(col(textCol), shingleK))
     val scored = pruned
       .select(col("_bid"), col("_cid"), jaccard(col("_sh_bid"), shCid).as("jaccard"))
     val w = Window.partitionBy(col("_bid"))

@@ -148,12 +148,21 @@ object Fsck {
     * `num_bands` band rows (a half-appended or half-erased batch leaves
     * a partial signature that silently weakens near-dup recall) and
     * exactly one shingle-set row, and the two legs agree on membership.
-    * One full-join pass plus a shingles-leg aggregate.
+    * One full-join pass plus a shingles-leg aggregate. An index whose
+    * meta lacks the shingle-form marker (md5-digest shingle sets, which
+    * every reader refuses: [[graft.dedup.Dedup.bandMeta]]) fails
+    * `shingle_form` and is not audited further: it must be rebuilt.
     */
   def bandIndex(spark: SparkSession, dir: String): Seq[Check] = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val idCol = meta.getAs[String]("id_col")
-    val numBands = meta.getAs[Int]("num_bands")
+    val meta =
+      try graft.dedup.Dedup.bandMeta(spark, dir)
+      catch {
+        case e: IllegalArgumentException =>
+          return markerHygiene(spark, dir, "band") :+
+            Check("band", "shingle_form", false, e.getMessage)
+      }
+    val idCol = meta.idCol
+    val numBands = meta.numBands
     val bands = spark.read.parquet(s"$dir/bands")
     val shingles = spark.read.parquet(s"$dir/shingles")
 
@@ -169,6 +178,7 @@ object Fsck {
       (count(lit(1)) - count_distinct(col(idCol))).as("dups")).head().getAs[Long]("dups")
 
     markerHygiene(spark, dir, "band") ++ Seq(
+      Check("band", "shingle_form", true, graft.dedup.Dedup.ShingleForm),
       Check("band", "legs_agree", n("bands_only") == 0L && n("shingles_only") == 0L,
         s"${n("bands_only")} ids bands-only, ${n("shingles_only")} shingles-only"),
       Check("band", "signature_complete", n("partial_sigs") == 0L,

@@ -862,8 +862,10 @@ object ExtensionQueries {
     ),
     "q_ngram_jaccard" -> Q(
       (s, dir) => {
-        // distinct md5(shingle) sets: same Jaccard value, but the self-join
-        // shuffles compact fixed-width digests instead of raw shingle text
+        // distinct md5(shingle) sets, as the DuckDB twin builds them: the
+        // same Jaccard as the raw shingles, but not smaller — a 32-char hex
+        // digest is about twice a 3-word shingle (~16 chars), which is why
+        // the stored band index keeps the text (Dedup.shingleSet)
         val d = docs(s, dir)
           .select(col("doc_id"), col("lang"), col("n_chars"),
             array_distinct(transform(Dedup.wordShingles(col("text"), 3), x => md5(x)))

@@ -355,8 +355,7 @@ object StreamingPipeline {
       .withWatermark(tsCol, watermark)
       .withColumn("_sig",
         Dedup.minhashSignature(Dedup.wordShingles(col(textCol), shingleK), numHashes))
-      .withColumn("_sh",
-        array_distinct(transform(Dedup.wordShingles(col(textCol), shingleK), x => md5(x))))
+      .withColumn("_sh", Dedup.shingleSet(col(textCol), shingleK))
       .select(col(idCol), col(tsCol), col("_sh"),
         posexplode(bandCols).as(Seq("band", "hash")))
       .join(bandTable, Seq("band", "hash"))

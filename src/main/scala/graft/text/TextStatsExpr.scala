@@ -100,8 +100,35 @@ object TextStatsExpr {
   private def isRegexWs(cp: Int): Boolean =
     cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0b || cp == '\f' || cp == '\r'
 
-  /** Shared by interpreted eval and generated code. */
+  /** The last input a thread computed (a copy) and its stats. */
+  private final class Last {
+    var in: UTF8String = null
+    var out: InternalRow = null
+  }
+
+  private val last = ThreadLocal.withInitial[Last](() => new Last)
+
+  /** Shared by interpreted eval and generated code. A one-entry cache per
+    * thread, keyed by value (the shape Spark's regex expressions use for
+    * their last pattern): a Filter over `_st` fields gets `text_stats`
+    * inlined once per reference when the optimizer pushes it through the
+    * aliasing projection, and `FilterExec` has no subexpression
+    * elimination, so `CorpusPipeline.prepare`'s gate would otherwise
+    * traverse each document once per referenced field. The input is
+    * compared with `equals` against a `copy()`: row buffers reuse their
+    * bytes, so the same `UTF8String` object can hold the next row's text
+    * (and `clone()` shares a backing array that spans the whole string).
+    */
   def compute(text: UTF8String): InternalRow = {
+    val l = last.get
+    if (!text.equals(l.in)) {
+      l.out = computeUncached(text)
+      l.in = text.copy()
+    }
+    l.out
+  }
+
+  private def computeUncached(text: UTF8String): InternalRow = {
     val s = text.toString
 
     // ---- character-level pass over the untrimmed text --------------------

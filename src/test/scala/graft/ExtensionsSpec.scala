@@ -372,6 +372,44 @@ class ExtensionsSpec extends SparkSpec {
     assert(rs.filter($"resized_width" > 100 || $"resized_height" > 100).count() == 0)
   }
 
+  test("TextStatsExpr's per-thread cache is keyed by value, not by the reused row buffer") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.text.TextStatsExpr
+    // same byte length, different stats
+    val (a, b) = ("the cat sat on the mat", "der Hund ist im Garten")
+    assert(a.getBytes("UTF-8").length == b.getBytes("UTF-8").length)
+    // stats computed on a thread of their own, whose cache is empty
+    def uncached(t: String): Seq[Any] = {
+      var out: Seq[Any] = null
+      val th = new Thread(() =>
+        out = TextStatsExpr.compute(UTF8String.fromString(t)).toSeq(TextStatsExpr.schema))
+      th.start(); th.join()
+      out
+    }
+    val (wantA, wantB) = (uncached(a), uncached(b))
+    assert(wantA != wantB)
+    // one UTF8String over one byte array, overwritten between calls: the
+    // shape of a scan's reused row buffer
+    val buf = a.getBytes("UTF-8")
+    val text = UTF8String.fromBytes(buf)
+    val expr = TextStatsExpr(BoundReference(0, StringType, nullable = true))
+    def eval(v: UTF8String): Any = expr.eval(InternalRow(v)) match {
+      case null => null
+      case r: InternalRow => r.toSeq(TextStatsExpr.schema)
+    }
+    def put(t: String): Unit = System.arraycopy(t.getBytes("UTF-8"), 0, buf, 0, buf.length)
+    assert(eval(text) == wantA)
+    put(b)
+    assert(eval(text) == wantB)
+    put(a)
+    assert(eval(text) == wantA)
+    assert(eval(null) == null)
+    assert(eval(text) == wantA)
+  }
+
   test("TextStatsExpr matches the HOF formulation on real documents") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val toks = TextAnalysis.tokens($"text")

@@ -3,10 +3,11 @@
 
 Reads two trace files a traced perfbench run writes
 (`.bench_build/traces/<workload>-seed<n>.json`, a JSON list of spans) and
-prints, per span name, `wall_s`, `jobs`, `tasks`, `task_s` and
-`shuffle_write_mb` for each side and the change minus the parent. Spans
-that share a name (the per-batch spans of curate_rights, the probe rounds
-of anonymize_batch) are summed; `n` is how many there were on each side.
+prints, per span name, `wall_s`, `jobs`, `tasks`, `task_s`,
+`shuffle_write_mb` and `output_mb` (the bytes its jobs wrote) for each
+side and the change minus the parent. Spans that share a name (the
+per-batch spans of curate_rights, the probe rounds of anonymize_batch)
+are summed; `n` is how many there were on each side.
 A span that only one side ran prints `-` for the other.
 
 Take the two traces from the same workload and seed, one per checkout:
@@ -18,7 +19,7 @@ Take the two traces from the same workload and seed, one per checkout:
 import json
 import sys
 
-COUNTERS = ("wall_s", "jobs", "tasks", "task_s", "shuffle_write_mb")
+COUNTERS = ("wall_s", "jobs", "tasks", "task_s", "shuffle_write_mb", "output_mb")
 
 
 def load(path):
@@ -78,20 +79,26 @@ def self_check():
     import os
     import tempfile
 
-    def span(i, name, wall, jobs, tasks, task_s, mb):
+    def span(i, name, wall, jobs, tasks, task_s, mb, out_mb=0.0):
         return {"workload": "w", "id": i, "name": name, "parent": -1, "iteration": 0,
                 "start_ns": i, "end_ns": i + 1, "derived": False, "wall_s": wall,
                 "self_s": wall, "jobs": jobs, "tasks": tasks, "task_s": task_s,
-                "shuffle_write_mb": mb, "output_mb": 0.0}
+                "shuffle_write_mb": mb, "output_mb": out_mb}
 
     parent = [span(0, "validate.pii_scan", 3.7, 4, 8, 7.0, 2.9),
               span(1, "probe.staging", 0.3, 1, 4, 0.8, 0.0),
               span(2, "probe.staging", 0.5, 1, 4, 1.0, 0.0),
-              span(3, "validate.gone", 1.0, 2, 2, 1.0, 0.0)]
+              span(3, "validate.gone", 1.0, 2, 2, 1.0, 0.0),
+              span(4, "cli.rectify", 2.0, 30, 60, 4.0, 0.1, 5.23),
+              span(5, "cli.incremental", 6.0, 40, 90, 9.0, 0.5, 4.0),
+              span(6, "cli.incremental", 4.0, 40, 90, 7.0, 0.5, 5.81)]
     change = [span(0, "validate.pii_scan", 1.0, 2, 5, 2.4, 0.06),
               span(1, "probe.staging", 0.4, 1, 4, 0.9, 0.0),
               span(2, "probe.staging", 0.4, 1, 4, 0.9, 0.0),
-              span(3, "validate.new", 0.5, 1, 1, 0.2, 0.0)]
+              span(3, "validate.new", 0.5, 1, 1, 0.2, 0.0),
+              span(4, "cli.rectify", 2.0, 30, 60, 4.0, 0.1, 2.51),
+              span(5, "cli.incremental", 6.0, 38, 88, 9.0, 0.5, 1.5),
+              span(6, "cli.incremental", 4.0, 40, 90, 7.0, 0.5, 2.81)]
     with tempfile.TemporaryDirectory() as d:
         paths = []
         for name, spans in (("p.json", parent), ("c.json", change)):
@@ -100,7 +107,8 @@ def self_check():
                 json.dump(spans, f)
         p, c = load(paths[0]), load(paths[1])
     rows = {r[0]: r for r in diff(p, c)}
-    assert list(rows) == ["validate.pii_scan", "probe.staging", "validate.gone", "validate.new"]
+    assert list(rows) == ["validate.pii_scan", "probe.staging", "validate.gone",
+                          "cli.rectify", "cli.incremental", "validate.new"]
     _, np_, nc, v = rows["validate.pii_scan"]
     assert (np_, nc) == (1, 1)
     assert v["jobs"] == (4, 2, -2) and v["tasks"] == (8, 5, -3), v
@@ -112,12 +120,21 @@ def self_check():
     # a span one side lacks has no delta
     assert rows["validate.gone"][2] == 0 and rows["validate.gone"][3]["jobs"] == (2, None, None)
     assert rows["validate.new"][1] == 0 and rows["validate.new"][3]["jobs"] == (None, 1, None)
+    # output bytes: per span and summed over repeated names
+    o = rows["cli.rectify"][3]["output_mb"]
+    assert o[:2] == (5.23, 2.51) and abs(o[2] + 2.72) < 1e-9, o
+    o = rows["cli.incremental"][3]["output_mb"]
+    assert abs(o[0] - 9.81) < 1e-9 and abs(o[1] - 4.31) < 1e-9 and abs(o[2] + 5.5) < 1e-9, o
+    assert rows["cli.incremental"][3]["jobs"] == (80, 78, -2)
     buf = io.StringIO()
     report(p, c, buf)
     text = buf.getvalue().splitlines()
-    assert len(text) == 5, text
+    assert len(text) == 7, text
+    assert "output_mb parent" in text[0], text[0]
     line = next(l for l in text if l.startswith("validate.pii_scan"))
     assert "1/1" in line and "-2" in line and "-2.840" in line, line
+    line = next(l for l in text if l.startswith("cli.rectify"))
+    assert line.rstrip().endswith("5.230     2.510    -2.720"), line
     assert next(l for l in text if l.startswith("validate.gone")).count(" - ") >= 5, text
     print("perfbench_spans self-check: ok")
 
